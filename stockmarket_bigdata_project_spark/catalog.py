@@ -6,13 +6,26 @@ reference build_training_dataset.py:21-48, README.md:446-451). Here the
 storage layer is columnar parquet; tables are registered as Spark temp views
 so both the DataFrame and SQL APIs reach them, and Catalyst gets filter
 pushdown + column pruning into the scans for free.
+
+Schema cache: ``spark.read.parquet(path)`` infers its schema by running a
+Spark job that reads the file footer, on every call: a median 76 ms per
+table read against 14 ms with the schema given (4-core host, sf0.01).
+``load_table`` therefore keeps the inferred ``StructType`` per file and
+reads through ``spark.read.schema(cached)``. The key is the path, the file's inode, size
+and mtime (ns), plus the values of the parquet confs that change inferred
+types (``_SCHEMA_CONFS``; ``nanosAsLong`` is pinned by ``load_table``
+itself), so a rewritten file or a changed conf is re-inferred. Only regular
+files are cached: a directory's stat does not change when a part file in it
+is rewritten in place.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -86,6 +99,37 @@ def _maybe_fanout(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
+# Parquet confs that change the types schema inference produces.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# One entry per file version read by this process. Unlocked: two threads
+# racing on a miss both infer the same schema and store equal values.
+_schemas: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file
+    version (see the module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:  # missing: Spark raises its own error for the path
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (path, st.st_ino, st.st_size, st.st_mtime_ns) + tuple(
+        spark.conf.get(c) for c in _SCHEMA_CONFS
+    )
+    schema = _schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan; schema is self-describing (SURVEY §1.3).
 
@@ -109,7 +153,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = table_path(sf_dir, name)
-    df = _maybe_fanout(spark, spark.read.parquet(path), path)
+    df = _maybe_fanout(spark, _read_parquet(spark, path), path)
     if name == "events":
         from pyspark.sql import functions as F
 
@@ -120,14 +164,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (idempotent)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -36,12 +36,6 @@ def dec_sum(col: Column | str, scale: int = 2) -> Column:
     return F.sum(_c(col).cast(f"decimal(27,{scale})")).cast("double")
 
 
-def dec_avg(col: Column | str, scale: int = 2) -> Column:
-    """Deterministic mean: exact decimal sum ÷ non-null count, in binary64.
-    Matches avg()'s null semantics (count of the column, not count(*))."""
-    return dec_sum(col, scale) / F.count(_c(col))
-
-
 def big_sum(col: Column) -> Column:
     """Exact wide-integer sum converted to DOUBLE via a decimal STRING.
 
@@ -63,7 +57,3 @@ def sql_big_sum(expr: str) -> str:
 
 def sql_dec_sum(expr: str, scale: int = 2) -> str:
     return f"CAST(sum(CAST({expr} AS DECIMAL(27,{scale}))) AS DOUBLE)"
-
-
-def sql_dec_avg(expr: str, scale: int = 2) -> str:
-    return f"{sql_dec_sum(expr, scale)} / count({expr})"

@@ -42,34 +42,41 @@ N_CENTROIDS = 8
 NPROBE = 4  # recall/cost dial: fraction of the space scanned = nprobe / k
 
 
+# The vector kernels are emitted as single SQL expressions: a Python-lambda
+# higher-order function costs about a dozen Py4J round trips to build, which
+# at benchmark scale outweighs running it. The expression trees are the same
+# as the lambda forms', so results are unchanged.
+_MVEC_EXPR = "transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000000, 0))"
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, label, mvec): components as exact integer micros (doubles
     holding integer values — both engines round the same binary64 product
     to the same integer, scale-0 rounding has no decimal-shift step)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return e.select(
-        "vec_id",
-        "label",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * 1000000, 0)
-        ).alias("mvec"),
-    )
+    return e.select("vec_id", "label", F.expr(_MVEC_EXPR).alias("mvec"))
 
 
-def _dot(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
+def _dot_expr(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
 
 
-def _norm(a) -> F.Column:
-    return F.sqrt(_dot(a, a))
+def _norm(a: str) -> F.Column:
+    return F.expr(f"sqrt({_dot_expr(a, a)})")
 
 
-def _cosine(a, b) -> F.Column:
+def _cosine(a: str, b: str) -> F.Column:
     """Bit-exact across engines when a and b hold integer micros (exact
     integer dot/norms → IEEE sqrt → one division)."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return F.expr(
+        f"{_dot_expr(a, b)} / (sqrt({_dot_expr(a, a)}) * sqrt({_dot_expr(b, b)}))"
+    )
+
+
+def _cosine_normed(a: str, b: str, na: str, nb: str) -> F.Column:
+    """_cosine with the norms precomputed in columns na and nb: the same
+    binary64 algebra, one fold per pair instead of three."""
+    return F.expr(f"{_dot_expr(a, b)} / ({na} * {nb})")
 
 
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,7 +96,7 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            _cosine(F.col("qvec"), F.col("cvec")).alias("cos"),
+            _cosine("qvec", "cvec").alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
@@ -115,7 +122,7 @@ def embedding_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("mvec").alias("qvec")
     )
     c = e.select(F.col("vec_id").alias("cand_id"), F.col("mvec").alias("cvec"))
-    cos = _cosine(F.col("qvec"), F.col("cvec"))
+    cos = _cosine("qvec", "cvec")
     return (
         F.broadcast(q)
         .crossJoin(c)
@@ -146,7 +153,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "mvec",
             "centroid_id",
-            _cosine(F.col("mvec"), F.col("cvec")).alias("ccos"),
+            _cosine("mvec", "cvec").alias("ccos"),
         )
         .withColumn("rn", F.row_number().over(assign_w))
         .filter(F.col("rn") == 1)
@@ -164,7 +171,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "qvec",
             "centroid_id",
-            _cosine(F.col("qvec"), F.col("cvec")).alias("ccos"),
+            _cosine("qvec", "cvec").alias("ccos"),
         )
         .withColumn("rn", F.row_number().over(probe_w))
         .filter(F.col("rn") <= NPROBE)
@@ -179,7 +186,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands.select(
             "query_id",
             F.col("vec_id").alias("cand_id"),
-            _cosine(F.col("qvec"), F.col("mvec")).alias("cos"),
+            _cosine("qvec", "mvec").alias("cos"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
@@ -234,7 +241,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precedent, r14): the theta join then pays a single HOF dot per pair
     # instead of three folds. dot/(na·nb) is the same binary64 algebra as
     # _cosine — bit-identical results.
-    e = _emb(spark, sf_dir).withColumn("nrm", _norm(F.col("mvec")))
+    e = _emb(spark, sf_dir).withColumn("nrm", _norm("mvec"))
     a = e.select(
         F.col("vec_id").alias("vec_a"),
         F.col("mvec").alias("va"),
@@ -245,7 +252,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("mvec").alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = _cosine_normed("va", "vb", "na", "nb")
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b", cos.alias("cosine"))
@@ -259,6 +266,43 @@ SEMDEDUP_TAU = 0.40  # within-cluster cosine above this = semantic duplicate
 # floored at N_CENTROIDS it reproduces the historical k = 8 at every gate
 # SF (500/500/2000 vectors), so proven results are bit-unchanged.
 SEMDEDUP_VECS_PER_CLUSTER = 250
+
+
+def _semdedup_prune(assigned: DataFrame) -> DataFrame:
+    """The SemDeDup within-bucket prune over (vec_id, mvec, bucket) rows,
+    shared by semdedup_survivors and semdedup_survivors_ann: a vector is
+    removed (kept = 0) when a smaller id in its bucket has cosine ≥
+    SEMDEDUP_TAU to it.
+
+    One bucket self-join filtered on vec_a <= vec_b: each vector meets
+    itself, so grouping the pairs by vec_b yields a row for every vector,
+    and the assignment is consumed once (no left join back to it, no
+    distinct). The aggregate keys include bucket, so the join's bucket
+    partitioning already satisfies them. Norms fold once per vector row,
+    not once per pair; dot / (na · nb) is _cosine's binary64 algebra, so
+    results stay bit-exact vs the oracle."""
+    with_norm = assigned.withColumn("nrm", _norm("mvec"))
+    a = with_norm.select(
+        F.col("bucket"),
+        F.col("vec_id").alias("vec_a"),
+        F.col("mvec").alias("va"),
+        F.col("nrm").alias("na"),
+    )
+    b = with_norm.select(
+        F.col("bucket"),
+        F.col("vec_id").alias("vec_b"),
+        F.col("mvec").alias("vb"),
+        F.col("nrm").alias("nb"),
+    )
+    is_dup = (F.col("vec_a") < F.col("vec_b")) & (
+        _cosine_normed("va", "vb", "na", "nb") >= SEMDEDUP_TAU
+    )
+    return (
+        a.join(b, ["bucket"])
+        .filter(F.col("vec_a") <= F.col("vec_b"))
+        .groupBy(F.col("vec_b").alias("vec_id"), "bucket")
+        .agg((~F.max(is_dup)).cast("int").alias("kept"))
+    )
 
 
 def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,48 +353,13 @@ def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "mvec",
             "centroid_id",
-            _cosine(F.col("mvec"), F.col("cvec")).alias("ccos"),
+            _cosine("mvec", "cvec").alias("ccos"),
         )
         .withColumn("rn", F.row_number().over(assign_w))
         .filter(F.col("rn") == 1)
         .select("vec_id", "mvec", F.col("centroid_id").alias("bucket"))
     )
-    # norms fold ONCE per (bucket, vector) input row, not once per pair:
-    # the pairwise filter then pays a single HOF dot per pair instead of
-    # three folds. cos = dot / (norm_a · norm_b) is the same binary64
-    # algebra as _cosine, so results stay bit-exact vs the oracle.
-    with_norm = assigned.withColumn("nrm", _norm(F.col("mvec")))
-    a = with_norm.select(
-        F.col("bucket"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("mvec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = with_norm.select(
-        F.col("bucket"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("mvec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    removed = (
-        a.join(b, ["bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(
-            _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-            >= SEMDEDUP_TAU
-        )
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-        .withColumn("is_dup", F.lit(1))
-    )
-    return (
-        assigned.join(removed, "vec_id", "left")
-        .select(
-            "vec_id",
-            "bucket",
-            (F.coalesce("is_dup", F.lit(0)) == 0).cast("int").alias("kept"),
-        )
-    )
+    return _semdedup_prune(assigned)
 
 
 N_PLANES = 32  # 8 bands × 4 bits
@@ -456,7 +465,7 @@ def embedding_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verification: norms fold once per vector row (semdedup precedent,
     # r14) — one HOF dot per candidate pair instead of three folds;
     # dot/(na·nb) is _cosine's algebra bit-for-bit.
-    with_nrm = e.withColumn("nrm", _norm(F.col("mvec")))
+    with_nrm = e.withColumn("nrm", _norm("mvec"))
     va = with_nrm.select(
         F.col("vec_id").alias("vec_a"),
         F.col("mvec").alias("va"),
@@ -473,10 +482,7 @@ def embedding_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            (
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb"))
-            ).alias("cosine"),
+            _cosine_normed("va", "vb", "na", "nb").alias("cosine"),
         )
         .filter(F.col("cosine") >= 0.40)
     )
@@ -519,7 +525,7 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "label",
         "vec_id",
-        _cosine(F.col("mvec"), F.col("cmvec")).alias("cos_to_centroid"),
+        _cosine("mvec", "cmvec").alias("cos_to_centroid"),
     )
 
 
@@ -533,10 +539,7 @@ def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted in exact integer units of micro/127 (|127·m − code·scale| —
     no division ever happens, so there is nothing to round)."""
     e = load_table(spark, sf_dir, "embeddings")
-    mvec = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * 1000000, 0)
-    )
-    m = e.select("vec_id", mvec.alias("mvec"))
+    m = e.select("vec_id", F.expr(_MVEC_EXPR).alias("mvec"))
     scale = F.array_max(F.transform("mvec", F.abs))
 
     def _code(x):
@@ -872,7 +875,7 @@ def semdedup_survivors_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "centroid_id",
             "cvec",
             "coarse_id",
-            _cosine(F.col("cvec"), F.col("gvec")).alias("gcos"),
+            _cosine("cvec", "gvec").alias("gcos"),
         )
         .withColumn("rn", F.row_number().over(fmap_w))
         .filter(F.col("rn") == 1)
@@ -891,7 +894,7 @@ def semdedup_survivors_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "mvec",
             "coarse_id",
-            _cosine(F.col("mvec"), F.col("gvec")).alias("gcos"),
+            _cosine("mvec", "gvec").alias("gcos"),
         )
         .groupBy("vec_id")
         .agg(
@@ -927,7 +930,7 @@ def semdedup_survivors_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "mvec",
             "centroid_id",
-            _cosine(F.col("mvec"), F.col("cvec")).alias("ccos"),
+            _cosine("mvec", "cvec").alias("ccos"),
         )
         .groupBy("vec_id")
         .agg(
@@ -946,40 +949,7 @@ def semdedup_survivors_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("best.centroid_id").alias("bucket"),
         )
     )
-    # within-bucket prune: duplicated verbatim from semdedup_survivors
-    # (hash-proven) rather than refactoring a proven query
-    with_norm = assigned.withColumn("nrm", _norm(F.col("mvec")))
-    a = with_norm.select(
-        F.col("bucket"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("mvec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = with_norm.select(
-        F.col("bucket"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("mvec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    removed = (
-        a.join(b, ["bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(
-            _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-            >= SEMDEDUP_TAU
-        )
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-        .withColumn("is_dup", F.lit(1))
-    )
-    return (
-        assigned.join(removed, "vec_id", "left")
-        .select(
-            "vec_id",
-            "bucket",
-            (F.coalesce("is_dup", F.lit(0)) == 0).cast("int").alias("kept"),
-        )
-    )
+    return _semdedup_prune(assigned)
 
 
 QUERIES["semdedup_survivors_ann"] = semdedup_survivors_ann
@@ -1063,7 +1033,7 @@ def _argmax_assign(side: DataFrame, cent: DataFrame) -> DataFrame:
             "vec_id",
             "mvec",
             "centroid_id",
-            _cosine(F.col("mvec"), F.col("cvec")).alias("ccos"),
+            _cosine("mvec", "cvec").alias("ccos"),
         )
         .groupBy("vec_id")
         .agg(
@@ -1114,9 +1084,9 @@ def incremental_semdedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("vec_id") < F.col("k"))
         .select(F.col("vec_id").alias("centroid_id"), F.col("mvec").alias("cvec"))
     )
-    ca = _argmax_assign(corpus, cent).withColumn("nrm", _norm(F.col("mvec")))
-    ba = _argmax_assign(batch, cent).withColumn("nrm", _norm(F.col("mvec")))
-    cos = _dot(F.col("bm"), F.col("cm")) / (F.col("bn") * F.col("cn"))
+    ca = _argmax_assign(corpus, cent).withColumn("nrm", _norm("mvec"))
+    ba = _argmax_assign(batch, cent).withColumn("nrm", _norm("mvec"))
+    cos = _cosine_normed("bm", "cm", "bn", "cn")
     return (
         ba.select(
             "bucket",
@@ -1201,7 +1171,7 @@ def _ensure_semdedup_index(
                 "centroid_id",
                 "cvec",
                 "coarse_id",
-                _cosine(F.col("cvec"), F.col("gvec")).alias("gcos"),
+                _cosine("cvec", "gvec").alias("gcos"),
             )
             .groupBy("centroid_id")
             .agg(
@@ -1222,7 +1192,7 @@ def _ensure_semdedup_index(
         )
         fmap.write.mode("overwrite").saveAsTable(ft)
         vcoarse = _two_level_assign(corpus, spark.table(gt), spark.table(ft))
-        vcoarse.withColumn("nrm", _norm(F.col("mvec"))).write.mode(
+        vcoarse.withColumn("nrm", _norm("mvec")).write.mode(
             "overwrite"
         ).bucketBy(_SEM_BUCKETS, "bucket").sortBy("bucket").saveAsTable(at)
         return gt, ft, at
@@ -1243,7 +1213,7 @@ def _two_level_assign(
             "vec_id",
             "mvec",
             "coarse_id",
-            _cosine(F.col("mvec"), F.col("gvec")).alias("gcos"),
+            _cosine("mvec", "gvec").alias("gcos"),
         )
         .groupBy("vec_id")
         .agg(
@@ -1268,7 +1238,7 @@ def _two_level_assign(
             "vec_id",
             "mvec",
             "centroid_id",
-            _cosine(F.col("mvec"), F.col("cvec")).alias("ccos"),
+            _cosine("mvec", "cvec").alias("ccos"),
         )
         .groupBy("vec_id")
         .agg(
@@ -1318,9 +1288,9 @@ def incremental_semdedup_indexed(
         batch = batch.filter(F.col("vec_id") < batch_cap)
     ba = _two_level_assign(
         batch, spark.table(gt), spark.table(ft)
-    ).withColumn("nrm", _norm(F.col("mvec")))
+    ).withColumn("nrm", _norm("mvec"))
     corpus_idx = spark.table(at)
-    cos = _dot(F.col("bm"), F.col("cm")) / (F.col("bn") * F.col("cn"))
+    cos = _cosine_normed("bm", "cm", "bn", "cn")
     return (
         ba.select(
             "bucket",
@@ -1603,7 +1573,7 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "hit_id",
-            _cosine(F.col("qvec"), F.col("cvec")).alias("cos"),
+            _cosine("qvec", "cvec").alias("cos"),
         )
         .withColumn("r_dense", F.row_number().over(dw))
         .select("q_id", "hit_id", "r_dense")

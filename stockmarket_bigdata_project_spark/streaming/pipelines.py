@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import tempfile
 import threading
 import time
@@ -87,21 +88,26 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_slices: int = N_SLICES) -> st
             # own staging dir per slice: concurrent appends into ONE dir
             # would race on the shared _temporary commit dir
             stage = tempfile.mkdtemp(prefix="spark_graft_replay_slice_")
-            ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(stage)
-            return next(
-                os.path.join(stage, f)
-                for f in os.listdir(stage)
-                if f.endswith(".parquet")
-            )
+            try:
+                ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(stage)
+                parts = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+                if len(parts) != 1:
+                    raise RuntimeError(
+                        f"replay slice {i} of {sf_dir!r} wrote {len(parts)}"
+                        f" parquet part files, expected 1: {sorted(parts)}"
+                    )
+                dst = os.path.join(out, f"slice_{i:02d}.parquet")
+                os.replace(os.path.join(stage, parts[0]), dst)
+                return dst
+            finally:
+                shutil.rmtree(stage, ignore_errors=True)
 
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=n_slices) as pool:
-            parts = list(pool.map(write_slice, range(n_slices)))
+            slices = list(pool.map(write_slice, range(n_slices)))
         now = time.time()
-        for i, src in enumerate(parts):
-            dst = os.path.join(out, f"slice_{i:02d}.parquet")
-            os.replace(src, dst)
+        for i, dst in enumerate(slices):
             mtime = now - (n_slices - i)  # strictly increasing, all past
             os.utime(dst, (mtime, mtime))
         _replay_cache[key] = out

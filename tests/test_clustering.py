@@ -47,7 +47,7 @@ def test_semdedup_removals_subset_of_bruteforce_near_dups(spark, sf_dir):
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("mvec").alias("vb"))
     full = (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .filter(_cosine(F.col("va"), F.col("vb")) >= SEMDEDUP_TAU)
+        .filter(_cosine("va", "vb") >= SEMDEDUP_TAU)
         .select("vec_a", "vec_b")
         .collect()
     )

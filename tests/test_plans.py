@@ -6,6 +6,7 @@ exchange fails here, not at 100 TB."""
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from stockmarket_bigdata_project_spark.llmdata.sampling import (
@@ -465,6 +466,57 @@ def test_semdedup_pairwise_is_bucket_equi_join(spark, sf_dir):
 
     plan = _plan(semdedup_survivors(spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
+
+
+def _executed_nodes(df) -> list[tuple[int, str, str]]:
+    """(depth, operator, detail block) for every node of df's executed AQE
+    plan, in tree order. A subtree that ran once and is read again appears
+    as a leaf ReusedExchange, so a repeated subtree here ran twice."""
+    df.collect()
+    plan = _plan(df)
+    assert "== Final Plan ==" in plan, plan
+    tree, details = plan.split("== Final Plan ==")[1].split("\n\n\n", 1)
+    tree = tree.split("== Initial Plan ==")[0]
+    detail = {
+        m.group(1): m.group(2)
+        for m in re.finditer(r"^\((\d+)\) [^\n]*\n(.*?)(?=^\(\d+\) |\Z)",
+                             details, re.M | re.S)
+    }
+    nodes = []
+    for line in tree.splitlines():
+        m = re.search(r"(?:\* )?([A-Z]\w*(?: \w+)*?)\s+\((\d+)\)", line)
+        if m:
+            nodes.append((m.start(), m.group(1), detail.get(m.group(2), "")))
+    return nodes
+
+
+def _centroid_cosine_projections(nodes) -> int:
+    """Executed projections that score corpus vectors against centroids
+    (output vec_id plus a ccos/gcos cosine): one per assignment level."""
+    return sum(
+        1
+        for _, name, det in nodes
+        if name == "Project"
+        and re.search(r"Output \[\d+\]: \[vec_id#[^\n]*\b[cg]cos#", det)
+    )
+
+
+def test_semdedup_assignment_runs_once(spark, sf_dir):
+    """The corpus-wide centroid assignment (cross join of the embeddings
+    with the broadcast centroids, then the argmax) runs once per query: the
+    prune's two join sides consume the same assignment, so the second reads
+    it through a reused exchange, and no join back to the assignment runs
+    it again. The flat form assigns in one level, the ANN form in two
+    (coarse cell, then fine centroid)."""
+    from stockmarket_bigdata_project_spark.llmdata.similarity import (
+        semdedup_survivors,
+        semdedup_survivors_ann,
+    )
+
+    flat = _executed_nodes(semdedup_survivors(spark, sf_dir))
+    assert _centroid_cosine_projections(flat) == 1, flat
+    ann = _executed_nodes(semdedup_survivors_ann(spark, sf_dir))
+    assert _centroid_cosine_projections(ann) == 2, ann
 
 
 def test_duplicate_spans_partial_counts_no_cartesian(spark, sf_dir):

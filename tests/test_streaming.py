@@ -319,3 +319,37 @@ def test_streaming_dedup_state_bounded_by_watermark(spark, tmp_path):
             f"{wm_prev}) — ids outlive their dedup window"
         )
     assert checked_informative >= 1, "watermark never advanced; bound vacuous"
+
+
+def test_replay_dir_leaves_only_the_replay_dir(spark, sf_dir, tmp_path):
+    """A fresh replay writes each slice through its own staging dir and
+    removes it after moving the part file out: the only new entry in the
+    temp dir is the replay dir, holding exactly the slice files."""
+    import os
+    import shutil
+    import tempfile
+
+    from stockmarket_bigdata_project_spark import catalog
+    from stockmarket_bigdata_project_spark.streaming import pipelines
+
+    sf = str(tmp_path)
+    shutil.copy(catalog.table_path(sf_dir, "events"), catalog.table_path(sf, "events"))
+
+    def ours() -> set[str]:
+        return {
+            e for e in os.listdir(tempfile.gettempdir())
+            if e.startswith("spark_graft_")
+        }
+
+    before = ours()
+    out = pipelines.replay_dir(spark, sf, n_slices=3)
+    try:
+        assert ours() - before == {os.path.basename(out)}
+        assert sorted(os.listdir(out)) == [
+            "slice_00.parquet", "slice_01.parquet", "slice_02.parquet"
+        ]
+        total = spark.read.parquet(out).count()
+        assert total == catalog.load_table(spark, sf, "events").count()
+    finally:
+        pipelines._replay_cache.pop((sf, 3), None)
+        shutil.rmtree(out, ignore_errors=True)

@@ -163,11 +163,15 @@ def asof(spark, sf_dir: str, reps: int) -> None:
             ),
         )
     # Arrow batch size sensitivity on the real merge
-    for batch in (1000, 10000, 100000):
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
-        _timed_jobs(spark, f"merge_pandas batch={batch}",
-                    lambda: _force(asof_join_merge_pandas(spark, sf_dir)))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev_batch = spark.conf.get(batch_conf)
+    try:
+        for batch in (1000, 10000, 100000):
+            spark.conf.set(batch_conf, str(batch))
+            _timed_jobs(spark, f"merge_pandas batch={batch}",
+                        lambda: _force(asof_join_merge_pandas(spark, sf_dir)))
+    finally:
+        spark.conf.set(batch_conf, prev_batch)
     # repartition-width sensitivity (groups per task)
     for parts in (8, 32, 128):
         def run(parts=parts):
