@@ -1,39 +1,47 @@
-"""Benchmark harness (driver contract): run the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and print ONE JSON line:
+"""Benchmark harness: time the HEADLINE and CURATION queries at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test catalog) on the session from
+`session.get_spark` (local[$SPARK_GRAFT_CPUS]) and print ONE JSON record as
+the last stdout line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "headline_queries_total", "value": N, "unit": "sec",
+     "sf": ..., "cpus": ..., "queries": {...}, "queries_cold": {...},
+     "curation_queries_total": N}
 
-Each query is forced with a noop-format write (full execution of every
-partition, no driver collect, no disk write) — the number is the end-to-end
-plan execution time including the parquet scan, which is what a cluster run
-would pay.
+Each query is forced with a noop-format write: every partition executes,
+nothing is collected or written to disk, so a timing is the end-to-end plan
+cost including the parquet scan.
 
-Protocol (v2, round 3): each query is executed twice — the first (cold)
-execution pays one-time costs that are per-process, not per-data (Python
-worker spin-up for Arrow UDF stages, codegen compilation, parquet footer
-cache); the second (steady) execution is the marginal cost of the plan,
-which is what scales with data volume on a long-running cluster. The
-headline `value`/`queries` are the steady timings; `queries_cold` records
-the cold pass for continuity with BENCH_r1/r2 (which timed only a cold
-pass, making per-query deltas noise-dominated: minhash_lsh_pairs measured
-10.4 s first-ever vs 2.8-3.2 s steady in the same session, n=5 interleaved
-— see PERFORMANCE.md "Round-3 reconciliation").
+Each query runs twice in one session. The cold pass pays per-process costs
+(Python worker spin-up for Arrow UDF stages, codegen, the parquet footer
+cache); the steady pass is the marginal cost of the plan. `queries` holds
+the steady time, except for STAGED queries, whose steady pass only reads a
+memoized relation: they report their cold time. `value` is the sum of
+`queries` over HEADLINE, `curation_queries_total` the same over CURATION.
+`queries` and `queries_cold` carry all HEADLINE + CURATION names.
+
+Per-query progress goes to stderr. Each run appends one entry
+`{code, sf, cpus, queries_cold, queries_steady}` to .bench_history.json.
+Judging a code change against box noise is the job of `perfbench/`
+(alternating A/B pairs plus deterministic per-layer counters); this file
+only reports.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
 import time
 
 from stockmarket_bigdata_project_spark import registry
+from stockmarket_bigdata_project_spark.llmdata.dedup import clear_staged_memo
 from stockmarket_bigdata_project_spark.session import get_spark
 
 # One headline per engine layer (SURVEY §2 / §7.1 build order): medallion
 # gold build, group-agg + join, interval join, window/time-series, top-k,
-# text extraction, minhash dedup, embedding similarity.
+# text extraction, minhash dedup, embedding similarity. The composition is
+# frozen so totals stay comparable across runs.
 HEADLINE = [
     "gold_daily_features",
     "revenue_by_brand",
@@ -53,17 +61,12 @@ HEADLINE = [
     "lang_id_scores",
     "media_catalog",
     "image_features",
-    # added late r3: flagship new-surface queries (absent from BENCH_r1/r2
-    # totals — compare totals excluding these two, or per-query)
     "hybrid_retrieval_rrf",
     "sequence_packing_spans",
 ]
 
-
-# Second recorded block (round 5): the heaviest post-r1 curation-tier
-# queries, absent from HEADLINE (whose composition is frozen for
-# round-over-round comparability). Until now these were tracked only in
-# PERFORMANCE.md prose, where a regression could hide.
+# The heaviest curation-tier queries absent from HEADLINE, recorded as a
+# second block so a regression there shows in the record too.
 CURATION = [
     "substring_dedup_rewrite",
     "boilerplate_strip",
@@ -71,24 +74,21 @@ CURATION = [
     "bpe_train_merges",
     "lm_ccnet_buckets_sampled",
     "training_manifest",
-    # round-5 late additions, baselined from their first recorded round
     "winnowing_dup_candidates",
     "ivf_pq_topk",
 ]
 
-
-# Queries built on session-memoized STAGED relations (persist + memo in
+# Queries built on session-memoized staged relations (persist + memo in
 # llmdata.dedup: the LSH candidate/verified-pair relations and the resolved
-# dup components): their second execution reads the in-memory relation — a
-# cache hit, not the pipeline. For these the COLD time is the honest
-# headline number (what a fresh cluster run pays end-to-end); the memo-hit
-# read lands in `queries_memo_hit` as the annotation, not the headline
-# (r7 verdict task 4 — the r7 headline had this inverted). r8 ADVICE
-# refinement: the staged memo is CLEARED before each staged query's cold
-# pass — without that, only the first staged query per session paid the
-# full pipeline (corpus_clean ran after minhash_lsh_pairs had already
-# memoized the pair relation, so its "cold" was partially warm).
+# dup components). Their second execution is a memo hit, not the pipeline,
+# so the cold time is the honest number. The memo is cleared before each
+# one's cold pass, or a later staged query would read relations an earlier
+# one memoized.
 STAGED = {"minhash_lsh_pairs", "corpus_clean", "training_manifest"}
+
+HISTORY_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), ".bench_history.json"
+)
 
 
 def _force(df) -> None:
@@ -96,104 +96,10 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# host_calibration_sec recorded in BENCH_r04.json — the fixed reference
-# point every later round normalizes to, so `*_normalized_to_r4` totals are
-# directly comparable across rounds without hand-computing raw×(cal_r4/cal_rN)
-# (r5 verdict task 5: the verdict and builder both re-derived this by hand).
-_R4_REFERENCE_CALIBRATION = 0.0959
-
-# spark_calibration_sec recorded in BENCH_r06.json (its first appearance) —
-# the fixed reference for the PRIMARY normalization series (r8 verdict task
-# 7: host_calibration and spark_calibration moved in opposite directions
-# r7→r8, so the JVM-side canary — which measures the thing under test — is
-# declared primary and both series are reported). PROTOCOL: the r6 anchor
-# is a BEST-OF-3 reading, so the r6-referenced normalization divides by the
-# best-of-3 reading each round (r10 ADVICE: median ≥ best, so dividing the
-# best-of-3 anchor by a median-of-5 measurement biased the series low from
-# r10 on).
-_R6_REFERENCE_SPARK_CALIBRATION = 0.0847
-
-# median-of-5 spark canary recorded in BENCH_r10.json (the first recording
-# under the median-of-5 protocol, driver box) — the anchor for the
-# protocol-consistent `headline_normalized_spark_r10m5` series from r11 on.
-_R10_REFERENCE_SPARK_CALIBRATION_MEDIAN5 = 0.0828
-
-# Quiet-box host canary anchor (r13 verdict task 3): the md5 med5 reading
-# of this box during its known-quiet hours (r12/r13 quiet sessions read
-# 0.083-0.085; the r13 slow session read 0.1067, +27%). A session whose
-# PRE-RUN canary is more than NOISY_SESSION_PCT slower than this anchor is
-# recorded `noisy: true` in .bench_history.json, and raw_band reports the
-# band both pooled and quiet-only — so one slow evening can no longer
-# widen the judged band without being labeled as box noise at record time.
-_QUIET_HOST_CANARY_ANCHOR = 0.0841
-NOISY_SESSION_PCT = 15.0
-
-
-def _median5(sample) -> float:
-    """Median of 5 runs (r9 verdict task 6: the two canaries disagreed in
-    magnitude two rounds running on single-shot/best-of-N readings; the
-    median of 5 bounds one-off scheduler/GC spikes in BOTH directions,
-    where best-of understates and single-shot can land on a spike)."""
-    import statistics
-
-    return round(statistics.median(sample() for _ in range(5)), 4)
-
-
-def _host_calibration() -> float:
-    """Seconds for a fixed, deterministic, single-core CPU workload — a
-    host-speed canary recorded beside the query timings so cross-round
-    comparisons can separate engine changes from box changes (round 4: the
-    identical test suite ran +33% slower than at the round-3 verdict on
-    unchanged code; absolute bench totals moved with it). Median of 5
-    since r10."""
-    import hashlib
-
-    def one() -> float:
-        start = time.perf_counter()
-        h = b"calib"
-        for _ in range(200_000):
-            h = hashlib.md5(h).digest()
-        assert h  # keep the loop un-eliminable
-        return time.perf_counter() - start
-
-    return _median5(one)
-
-
-def _spark_calibration(spark) -> tuple[float, float]:
-    """Second canary (r5 verdict task 5): a fixed Spark micro-query, so
-    JVM-side host variance is bounded separately from the Python-side md5
-    canary — r5's per-query normalized ratios spread 0.83-1.28x around
-    the single scalar, leaving sub-second queries unjudgeable
-    round-over-round. Returns (median-of-5, best-of-first-3) after one
-    warm-up: the median bounds spikes in both directions (the robust
-    reading, anchored at r11), the best-of-3 matches the protocol of the
-    r6 reference recording so the r6-referenced series stays
-    apples-to-apples (r10 ADVICE)."""
-    df = spark.range(0, 20_000_000, 1, 32).selectExpr(
-        "sum(id % 7919) AS s", "count(*) AS n"
-    )
-    _force(df)  # warm-up: codegen + scheduler paths
-
-    def one() -> float:
-        start = time.perf_counter()
-        _force(df)
-        return time.perf_counter() - start
-
-    import statistics
-
-    samples = [one() for _ in range(5)]
-    return (
-        round(statistics.median(samples), 4),
-        round(min(samples[:3]), 4),
-    )
-
-
 def _code_fingerprint() -> str:
     """md5 over the engine + bench source bytes: identifies "same code"
-    across sessions regardless of commit state, so raw_band only pools
-    runs of identical code (r10 verdict task 7)."""
-    import hashlib
-
+    across sessions regardless of commit state, so history entries of
+    identical code can be pooled."""
     root = os.path.dirname(os.path.abspath(__file__))
     paths = [os.path.join(root, "bench.py"), os.path.join(root, "__spark_entry__.py")]
     pkg = os.path.join(root, "stockmarket_bigdata_project_spark")
@@ -203,572 +109,108 @@ def _code_fingerprint() -> str:
         )
     h = hashlib.md5()
     for p in sorted(paths):
-        # relpath, not absolute (r11 ADVICE): the same code checked out at
-        # a different path / on another box must fingerprint identically,
-        # or the band silently stops pooling same-code sessions
+        # relpath, not absolute: the same code checked out at another path
+        # or on another box must fingerprint identically
         h.update(os.path.relpath(p, root).encode())
         with open(p, "rb") as fh:
             h.update(fh.read())
     return h.hexdigest()[:12]
 
 
-"""All bench history entries recorded before the cpus field existed (r14)
-ran on the driver-contract default master local[32]; pooling treats a
-missing cpus as 32 so the historical band is preserved, not orphaned."""
-_LEGACY_RECORDED_CPUS = 32
+def _time_queries(
+    spark, sf_dir: str, queries: dict, names: list[str]
+) -> tuple[dict[str, float], dict[str, float]]:
+    """(cold, steady) seconds per name; an unknown name raises KeyError."""
+    cold: dict[str, float] = {}
+    steady: dict[str, float] = {}
+    for name in names:
+        fn = queries[name]
+        if name in STAGED:
+            clear_staged_memo()  # cold must pay the full pipeline
+        start = time.perf_counter()
+        _force(fn(spark, sf_dir))
+        cold[name] = round(time.perf_counter() - start, 3)
+        start = time.perf_counter()
+        _force(fn(spark, sf_dir))
+        steady[name] = round(time.perf_counter() - start, 3)
+        print(
+            f"  {name}: {steady[name]:.3f}s steady ({cold[name]:.3f}s cold)",
+            file=sys.stderr,
+        )
+    return cold, steady
 
 
-def _raw_band(
-    fingerprint: str,
-    sf: float,
-    total: float,
-    queries_cold: dict | None = None,
-    queries_steady: dict | None = None,
-    host_canary: float | None = None,
-    noisy: bool = False,
-    cpus: int | None = None,
-) -> dict:
-    """Append this session's raw headline total to .bench_history.json and
-    return the band over all recorded same-code same-SF SAME-CORE-COUNT
-    sessions (including this one). The r10 verdict asked for the
-    cross-session raw variance — which the canaries cannot normalize away —
-    as a first-class bench field instead of PERFORMANCE.md prose.
-
-    Same-core-count (r14 measurement fix): the driver also runs the bench
-    at a LOWER core count to measure per-query core scaling — a
-    local[8] session's totals are slower by design, and pooling them with
-    local[32] sessions would widen the band with a number that measures the
-    core count, not the box or the code. Entries now record cpus; entries
-    predating the field were all local[32] (_LEGACY_RECORDED_CPUS)."""
-    hist_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bench_history.json"
+def _record_line(
+    sf: float, cpus: int, cold: dict[str, float], steady: dict[str, float]
+) -> str:
+    """The bench record as one JSON line. At 28 names and 999.999 s in
+    both per-query dicts it stays under 1,900 chars, so it fits in the
+    last 2,000 chars of stdout that a caller may keep."""
+    names = HEADLINE + CURATION
+    timings = {n: cold[n] if n in STAGED else steady[n] for n in names}
+    return json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "value": round(sum(timings[n] for n in HEADLINE), 3),
+            "unit": "sec",
+            "sf": sf,
+            "cpus": cpus,
+            "queries": timings,
+            "queries_cold": {n: cold[n] for n in names},
+            "curation_queries_total": round(
+                sum(timings[n] for n in CURATION), 3
+            ),
+        }
     )
+
+
+def _append_history(path: str, entry: dict) -> None:
+    """Append `entry` to the JSON list at `path`. A missing or malformed
+    file starts a new list; a failed write is reported, not raised, so the
+    run still prints its record."""
     try:
-        with open(hist_path) as fh:
+        with open(path) as fh:
             hist = json.load(fh)
     except (OSError, ValueError):
         hist = []
-    entry = {"code": fingerprint, "sf": sf, "raw_headline_total": total}
-    if cpus is not None:
-        entry["cpus"] = cpus
-    if host_canary is not None:
-        # pre-session canary gate (r13 verdict task 3): the reading and the
-        # classification travel with the entry so the band can be re-pooled
-        # quiet-only by any later reader
-        entry["host_canary"] = host_canary
-        entry["noisy"] = noisy
-    if queries_cold:
-        # per-query colds (r12): the cross-round baseline source for the
-        # auto-envelope once the driver artifact's tail truncates
-        entry["queries_cold"] = queries_cold
-    if queries_steady:
-        # per-query steadies (r13): the warm-run envelope baseline — for
-        # non-staged queries the n=5 envelope repeats are all steady-state
-        # (the query already ran twice in-session), so their band must be
-        # classified against the previous round's STEADY reading, not its
-        # cold (r12 ADVICE: a warm band compared to a cold baseline
-        # dissolves genuine cold-path regressions into "noise")
-        entry["queries_steady"] = queries_steady
+    if not isinstance(hist, list):
+        hist = []
     hist.append(entry)
     try:
-        with open(hist_path, "w") as fh:
+        with open(path, "w") as fh:
             json.dump(hist, fh, indent=1)
-    except OSError:
-        pass
-    want_cpus = cpus if cpus is not None else _LEGACY_RECORDED_CPUS
-    pool = [
-        e
-        for e in hist
-        if e.get("code") == fingerprint
-        and e.get("sf") == sf
-        and e.get("cpus", _LEGACY_RECORDED_CPUS) == want_cpus
-    ]
-    same = [e["raw_headline_total"] for e in pool]
-    quiet = [
-        e["raw_headline_total"] for e in pool if not e.get("noisy", False)
-    ]
-    out = {
-        "sessions": len(same),
-        "min": min(same),
-        "max": max(same),
-        "quiet_sessions": len(quiet),
-        "quiet_min": min(quiet) if quiet else None,
-        "quiet_max": max(quiet) if quiet else None,
-        "noisy_this_session": noisy,
-        "policy": (
-            "raw cold-policy headline totals across bench sessions on "
-            "IDENTICAL code (md5 of engine+bench source) at this SF and "
-            "core count (a lower-core driver scaling run must not widen "
-            "the band; entries predating the cpus field were local[32]); "
-            "judge "
-            "raw + this band over any single normalized scalar "
-            "(PERFORMANCE.md r10 finding: even median-of-5 canaries "
-            "disagree in direction across sessions on this box). quiet_* "
-            "pools only sessions whose pre-run host canary was within "
-            f"{NOISY_SESSION_PCT:.0f}%% of the quiet-box anchor "
-            f"{_QUIET_HOST_CANARY_ANCHOR} — the r13 band's slow end was a "
-            "known-bad host hour absorbed unlabeled (r13 verdict task 3)"
-        ),
-    }
-    return out
-
-
-ENVELOPE_TRIGGER_PCT = 15.0  # cold delta vs previous round that triggers n=5
-ENVELOPE_RUNS = 5
-
-
-def _history_readings(
-    sf: float, fingerprint: str, cpus: int | None = None
-) -> tuple[dict[str, float], dict[str, float]]:
-    """(cold, steady) per-query baselines from the most recent
-    .bench_history.json entry with a DIFFERENT code fingerprint at this SF
-    and the SAME core count — a local[8] scaling session's per-query
-    timings are not a baseline for a local[32] envelope (r14, with the
-    band fix; missing cpus on old entries means local[32])
-    (per-query colds recorded there since r12, steadies since r13).
-    "Different code" approximates "previous recorded code state" without
-    needing the driver artifact at all — and, unlike the newest
-    BENCH_r{N}.json, can never be THIS round's own record (r12 ADVICE: once
-    the driver writes the current round's BENCH, later same-round sessions
-    would otherwise compare against themselves)."""
-    hist_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bench_history.json"
-    )
-    try:
-        with open(hist_path) as fh:
-            hist = json.load(fh)
-    except (OSError, ValueError):
-        return {}, {}
-    want_cpus = cpus if cpus is not None else _LEGACY_RECORDED_CPUS
-    for e in reversed(hist):
-        if (
-            e.get("sf") == sf
-            and e.get("code") != fingerprint
-            and e.get("cpus", _LEGACY_RECORDED_CPUS) == want_cpus
-            and e.get("queries_cold")
-        ):
-            return dict(e["queries_cold"]), dict(e.get("queries_steady") or {})
-    return {}, {}
-
-
-def _bench_record_readings(
-    sf: float, cpus: int | None = None
-) -> tuple[dict[str, float], dict[str, float]]:
-    """(cold, steady) per-query baselines recovered from the driver's
-    BENCH_r{N}.json records, scanned in DESCENDING round order until one
-    matches this SF (r12 ADVICE: the old reader looked only at the single
-    highest-numbered record and gave up on an SF mismatch). Per record:
-    the `parsed` dict when the driver could parse the line, else
-    `queries_cold`/`curation_queries_cold` (and their steady-policy
-    `queries`/`curation_queries` twins) regex-extracted from the truncated
-    2000-char `tail` — a partial baseline just means fewer auto-envelopes."""
-    import glob
-    import re as _re
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    recs = []
-    for p in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = _re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            recs.append((int(m.group(1)), p))
-    for _n, path in sorted(recs, reverse=True):
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if rec.get("sf") != sf:
-            continue
-        # the driver wrapper stamps its run's core count on the record;
-        # a lower-core scaling record is not a baseline for this count.
-        # Records predating the field were all local[32] (the same
-        # legacy-as-32 policy _raw_band/_history_readings apply) — without
-        # the default, a cpus=8 run would baseline against local[32] colds
-        # and mis-classify every query as regressed (r14 ADVICE).
-        rec_cpus = rec.get("cpus", _LEGACY_RECORDED_CPUS)
-        if cpus is not None and rec_cpus != cpus:
-            continue
-        cold: dict[str, float] = {}
-        steady: dict[str, float] = {}
-        parsed = rec.get("parsed")
-        if isinstance(parsed, dict) and parsed.get("queries_cold"):
-            cold.update(parsed.get("queries_cold") or {})
-            cold.update(parsed.get("curation_queries_cold") or {})
-            steady.update(parsed.get("queries") or {})
-            steady.update(parsed.get("curation_queries") or {})
-        else:
-            tail = rec.get("tail") or ""
-            for key, dst in (
-                ("queries_cold", cold),
-                ("curation_queries_cold", cold),
-                ("queries", steady),
-                ("curation_queries", steady),
-            ):
-                m = _re.search(rf'"{key}": (\{{[^{{}}]*\}})', tail)
-                if m:
-                    try:
-                        dst.update(json.loads(m.group(1)))
-                    except ValueError:
-                        pass
-        if cold or steady:
-            return cold, steady
-        # r13 ADVICE: from r13 on the driver tail is the compact line,
-        # which carries NO per-query blocks — an SF-matching record that
-        # yields nothing must keep scanning older records that do, not
-        # return empty and mask them
-    return {}, {}
-
-
-def _prev_round_readings(
-    sf: float, fingerprint: str, cpus: int | None = None
-) -> tuple[dict[str, float], dict[str, float]]:
-    """Per-query (cold, steady) timings the auto-envelope compares against:
-    the previous recorded code state. History source first (complete
-    per-query dicts, code-fingerprinted so it can never be this session's
-    own code), driver BENCH records as the fallback for SFs that predate
-    the r12 history fields."""
-    cold, steady = _history_readings(sf, fingerprint, cpus)
-    if cold:
-        return cold, steady
-    return _bench_record_readings(sf, cpus)
-
-
-def _prev_round_cold(
-    sf: float, fingerprint: str, cpus: int | None = None
-) -> dict[str, float]:
-    return _prev_round_readings(sf, fingerprint, cpus)[0]
-
-
-def _compact_line(
-    total: float,
-    sf: float,
-    raw_cold_total: float,
-    band: dict,
-    norm_r6: float,
-    norm_r10m5: float,
-    spark_cal: float,
-    curation_total: float,
-    envelopes: dict,
-    cpus: int | None = None,
-    queries_cold: dict | None = None,
-) -> str:
-    """The decision scalars as ONE JSON line guaranteed < 1900 chars, so
-    the driver's 2000-char stdout tail — whitespace-flushed by main() just
-    before this line — is itself a parseable JSON document.
-
-    Since r15 the line carries `queries_cold` for every HEADLINE+CURATION
-    query (r14 verdict task 1b: the compact line held no per-query data, so
-    PERF_r14 could not attribute a single regression or compute core-scaling
-    ratios — `per_query={}` two rounds running). Cold is the uniform raw-band
-    policy, so the series is comparable across rounds and core counts. On
-    overflow the derivable blocks drop first (envelope_medians, note — both
-    recoverable from .bench_history.json); queries_cold is the driver's only
-    per-query channel and is truncated last, tail-first, with the count
-    declared."""
-    compact = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "cpus": cpus,
-        "raw_cold_headline_total": raw_cold_total,
-        "raw_band": {
-            "sessions": band["sessions"],
-            "min": band["min"],
-            "max": band["max"],
-            "quiet_sessions": band["quiet_sessions"],
-            "quiet_min": band["quiet_min"],
-            "quiet_max": band["quiet_max"],
-            "noisy_this_session": band["noisy_this_session"],
-        },
-        "headline_normalized_spark_r6": norm_r6,
-        "headline_normalized_spark_r10m5": norm_r10m5,
-        "spark_calibration_sec": spark_cal,
-        "curation_queries_total": curation_total,
-        "queries_cold": dict(queries_cold or {}),
-        "envelope_medians": {
-            n: e["median"] for n, e in sorted(envelopes.items())[:12]
-        },
-        "note": (
-            "compact record; full JSON line precedes, steady per-query "
-            "data in .bench_history.json"
-        ),
-    }
-    line = json.dumps(compact)
-    if len(line) > 1900:  # derivable blocks drop first
-        compact.pop("envelope_medians", None)
-        line = json.dumps(compact)
-    if len(line) > 1900:
-        compact.pop("note", None)
-        line = json.dumps(compact)
-    while len(line) > 1900 and compact["queries_cold"]:
-        # last resort, never expected at 28 queries (~800 chars): shed
-        # CURATION-tail entries one at a time and declare the truncation
-        last = list(compact["queries_cold"])[-1]
-        del compact["queries_cold"][last]
-        compact["queries_cold_truncated"] = True
-        line = json.dumps(compact)
-    return line
+    except OSError as exc:
+        print(f"  bench history not written: {exc}", file=sys.stderr)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark(app_name="stockmarket-bigdata-bench")
-
+    # session.py sets no spark.default.parallelism, so this is the n of the
+    # local[n] master the queries run on
+    cpus = spark.sparkContext.defaultParallelism
     queries = registry.all_queries()
-    names = [n for n in HEADLINE if n in queries]
 
-    # PRE-SESSION canary gate (r13 verdict task 3): read the host canary
-    # before any query runs; if the box is >NOISY_SESSION_PCT slower than
-    # the quiet anchor, this session still runs and records, but is labeled
-    # noisy and excluded from the quiet-only band.
-    calibration = _host_calibration()
-    noisy = calibration > _QUIET_HOST_CANARY_ANCHOR * (
-        1.0 + NOISY_SESSION_PCT / 100.0
+    # warm the JVM + parquet footer cache once so the first query doesn't
+    # pay session startup
+    _force(queries[HEADLINE[0]](spark, sf_dir).limit(1))
+
+    cold, steady = _time_queries(spark, sf_dir, queries, HEADLINE + CURATION)
+    _append_history(
+        HISTORY_PATH,
+        {
+            "code": _code_fingerprint(),
+            "sf": sf,
+            "cpus": cpus,
+            "queries_cold": cold,
+            "queries_steady": steady,
+        },
     )
-    print(
-        f"  pre-session host canary: {calibration:.4f}s vs quiet anchor "
-        f"{_QUIET_HOST_CANARY_ANCHOR} -> "
-        f"{'NOISY (excluded from quiet band)' if noisy else 'quiet'}",
-        file=sys.stderr,
-    )
-
-    # warm the JVM + parquet footer cache once so q1 doesn't pay session startup
-    _force(queries[names[0]](spark, sf_dir).limit(1))
-
-    from stockmarket_bigdata_project_spark.llmdata.dedup import (
-        clear_staged_memo,
-    )
-
-    def _run(block: list[str]) -> tuple[dict[str, float], dict[str, float]]:
-        cold: dict[str, float] = {}
-        steady: dict[str, float] = {}
-        for name in block:
-            if name in STAGED:
-                clear_staged_memo()  # cold must pay the FULL pipeline
-            start = time.perf_counter()
-            _force(queries[name](spark, sf_dir))
-            cold[name] = round(time.perf_counter() - start, 3)
-            start = time.perf_counter()
-            _force(queries[name](spark, sf_dir))
-            steady[name] = round(time.perf_counter() - start, 3)
-            print(
-                f"  {name}: {steady[name]:.3f}s steady ({cold[name]:.3f}s cold)",
-                file=sys.stderr,
-            )
-        return cold, steady
-
-    cold, steady = _run(names)
-    cur_cold, cur_steady = _run([n for n in CURATION if n in queries])
-
-    # Auto-envelope (r11 verdict task 6): the per-query regression
-    # classification that rounds 10–11 ran by hand (ivf_pq_topk /
-    # winnowing / boilerplate_strip precedents) is now part of the
-    # artifact — any query whose cold reading moved >ENVELOPE_TRIGGER_PCT
-    # against the previous round's recorded BENCH gets a same-session n=5
-    # envelope, so the next reader sees the same-code band instead of one
-    # noisy point. --envelope name1,name2 forces envelopes regardless of
-    # movement (used for verdict-requested classifications).
-    forced = set()
-    for i, a in enumerate(sys.argv):
-        if a == "--envelope" and i + 1 < len(sys.argv):
-            forced.update(x for x in sys.argv[i + 1].split(",") if x)
-    fingerprint = _code_fingerprint()
-    # the session's core count (same derivation as session.get_spark's
-    # master): bands and envelope baselines pool same-core sessions only —
-    # the driver's lower-core scaling run measures the core count, not the
-    # code, and must not widen the band or feed the envelopes
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    prev_cold, prev_steady = _prev_round_readings(sf, fingerprint, cpus)
-    all_cold = dict(cold)
-    all_cold.update(cur_cold)
-    all_steady = dict(steady)
-    all_steady.update(cur_steady)
-    # a typo'd / non-HEADLINE / non-CURATION --envelope name would otherwise
-    # be silently ignored and the requested classification never run
-    for name in sorted(forced - set(all_cold)):
-        print(
-            f"  WARNING: --envelope name {name!r} is not a timed "
-            "HEADLINE/CURATION query; ignored",
-            file=sys.stderr,
-        )
-    envelopes: dict[str, dict] = {}
-    for name, c in all_cold.items():
-        # explicit, not truthiness: a 0.0 prev-cold (sub-0.5 ms query
-        # rounded to 0.0 at 3 decimals) means "no usable baseline", and
-        # must not silently skip via falsiness (r12 ADVICE)
-        p = prev_cold.get(name)
-        delta = None if p is None or p <= 0.0 else round(100.0 * (c - p) / p, 1)
-        if name not in forced and (delta is None or abs(delta) <= ENVELOPE_TRIGGER_PCT):
-            continue
-        runs = []
-        for _ in range(ENVELOPE_RUNS):
-            if name in STAGED:
-                clear_staged_memo()
-            start = time.perf_counter()
-            _force(queries[name](spark, sf_dir))
-            runs.append(round(time.perf_counter() - start, 3))
-        import statistics
-
-        # Warm bias (r12 ADVICE): for a NON-staged query every envelope
-        # repeat is steady-state — the query already ran twice in-session —
-        # so the band speaks to the marginal plan cost only; classify it
-        # against the previous round's STEADY reading. Only STAGED queries
-        # (memo cleared per repeat) produce genuinely cold envelope runs
-        # comparable to the cold baseline. A cold-only regression on a
-        # non-staged query (codegen, UDF worker spin-up) will NOT appear
-        # in this band and needs a fresh-session cold reading to confirm.
-        envelopes[name] = {
-            "cold": c,
-            "prev_round_cold": p,
-            "cold_delta_pct": delta,
-            "steady": all_steady.get(name),
-            "prev_round_steady": prev_steady.get(name),
-            "runs": runs,
-            "runs_are_cold": name in STAGED,
-            "median": round(statistics.median(runs), 3),
-            "band": [min(runs), max(runs)],
-            "policy": (
-                "same-session n=%d repeats. STAGED queries: memo cleared "
-                "per run, runs are cold — classify vs prev_round_cold "
-                "using the band. Non-staged queries: runs are WARM "
-                "(3rd+ in-session execution) — classify vs "
-                "prev_round_steady; a cold-only delta unconfirmed by the "
-                "steady band needs a fresh-session cold to judge"
-                % ENVELOPE_RUNS
-            ),
-        }
-        print(
-            f"  envelope {name}: median {envelopes[name]['median']:.3f}s "
-            f"band {min(runs):.3f}-{max(runs):.3f} "
-            f"(cold {c:.3f}, prev {prev_cold.get(name)})",
-            file=sys.stderr,
-        )
-
-    # headline number per query: steady for real pipelines, COLD for the
-    # staged queries (their steady pass is a memo-hit read — see STAGED)
-    timings = {n: (cold[n] if n in STAGED else steady[n]) for n in steady}
-    cur_timings = {
-        n: (cur_cold[n] if n in STAGED else cur_steady[n]) for n in cur_steady
-    }
-    memo_hit = {n: steady[n] for n in steady if n in STAGED}
-    memo_hit.update({n: cur_steady[n] for n in cur_steady if n in STAGED})
-
-    total = round(sum(timings.values()), 3)
-    curation_total = round(sum(cur_timings.values()), 3)
-    # calibration measured PRE-session (the canary gate above); the spark
-    # canary stays post-run as before (it needs the warm session)
-    spark_cal, spark_cal_best3 = _spark_calibration(spark)
-    # Two normalizations, both reported (r8 verdict task 7: the two canaries
-    # moved in OPPOSITE directions r7→r8, so a single scalar is unreliable):
-    #   * host (Python md5 loop), reference = the r4 recording — kept for
-    #     series continuity with BENCH_r4..r8;
-    #   * spark (fixed 32-partition JVM aggregate), reference = the r6
-    #     recording (its first appearance) — PRIMARY, because it measures
-    #     the JVM/scheduler path the benchmark itself exercises.
-    norm = _R4_REFERENCE_CALIBRATION / calibration if calibration else 1.0
-    # protocol-matched: the r6 anchor is best-of-3, so divide by best-of-3
-    snorm = (
-        _R6_REFERENCE_SPARK_CALIBRATION / spark_cal_best3
-        if spark_cal_best3
-        else 1.0
-    )
-    snorm_m5 = (
-        _R10_REFERENCE_SPARK_CALIBRATION_MEDIAN5 / spark_cal
-        if spark_cal
-        else 1.0
-    )
-    # raw totals for the cross-session band use the COLD policy uniformly
-    # (cold for every headline query), matching the verdict's raw series
-    raw_cold_total = round(sum(cold.values()), 3)
-    band = _raw_band(
-        fingerprint,
-        sf,
-        raw_cold_total,
-        all_cold,
-        all_steady,
-        host_canary=calibration,
-        noisy=noisy,
-        cpus=cpus,
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "cpus": cpus,
-                "queries": timings,
-                "queries_cold": cold,
-                "queries_memo_hit": memo_hit,
-                "headline_policy": (
-                    "staged queries (persist+memo relations) reported COLD "
-                    "with the staged memo cleared immediately before each "
-                    "one's cold pass (a later staged query must not read "
-                    "relations memoized by an earlier block entry); their "
-                    "memo-hit steady read is in queries_memo_hit"
-                ),
-                "curation_queries_total": curation_total,
-                "curation_queries": cur_timings,
-                "curation_queries_cold": cur_cold,
-                "host_calibration_sec": calibration,
-                "spark_calibration_sec": spark_cal,
-                "spark_calibration_best3_sec": spark_cal_best3,
-                "calibration_policy": (
-                    "spark_calibration is PRIMARY (it measures the JVM "
-                    "query path under test). Two spark-referenced series: "
-                    "headline_normalized_spark_r6 divides the best-of-3 "
-                    "reading by the r6 best-of-3 anchor 0.0847 "
-                    "(protocol-matched since r11 — r10 ADVICE: r10 divided "
-                    "a median-of-5 reading by the best-of-3 anchor, biasing "
-                    "the series low); headline_normalized_spark_r10m5 "
-                    "divides the median-of-5 reading by the r10 median-of-5 "
-                    "anchor 0.0828. The host md5 canary and its "
-                    "r4-referenced normalization are kept for continuity."
-                ),
-                "headline_normalized_to_r4": round(total * norm, 3),
-                "curation_normalized_to_r4": round(curation_total * norm, 3),
-                "headline_normalized_spark_r6": round(total * snorm, 3),
-                "curation_normalized_spark_r6": round(
-                    curation_total * snorm, 3
-                ),
-                "headline_normalized_spark_r10m5": round(total * snorm_m5, 3),
-                "curation_normalized_spark_r10m5": round(
-                    curation_total * snorm_m5, 3
-                ),
-                "raw_cold_headline_total": raw_cold_total,
-                "raw_band": band,
-                "envelopes": envelopes,
-                "sf": sf,
-            }
-        )
-    )
-    # Compact decision record (r12 verdict task 1): the driver keeps only
-    # the LAST 2000 chars of stdout, and the full record above has outgrown
-    # that since r8 ("parsed": null every round; judges hand-recover figures
-    # from a truncated string). Emit the decision scalars as one line well
-    # under the window, preceded by a whitespace flush line sized so the
-    # driver's 2000-char tail is leading-whitespace + this object — valid
-    # JSON under BOTH known driver strategies (json.loads of the whole tail,
-    # which skips leading whitespace, and last-line parsing). The full
-    # record above still feeds .bench_history.json / per-query analysis.
+    # stray stdout before the record must not break a json.loads of the
+    # last 2,000 chars of stdout, so a whitespace line pushes it out
     print(" " * 2000)
-    print(
-        _compact_line(
-            total,
-            sf,
-            raw_cold_total,
-            band,
-            round(total * snorm, 3),
-            round(total * snorm_m5, 3),
-            spark_cal,
-            curation_total,
-            envelopes,
-            cpus=cpus,
-            queries_cold=all_cold,
-        )
-    )
+    print(_record_line(sf, cpus, cold, steady))
 
 
 if __name__ == "__main__":
