@@ -1,9 +1,9 @@
 """Shared cache + naming discipline for the stored-index builders.
 
 The four stored-index families (exact-hash, LSH band, SemDeDup, bench-gram)
-and the co-bucketed shard layout each write catalog tables once per corpus
+and both co-bucketed layouts each write catalog tables once per corpus
 and memoize the handle. Two hazards the r9 ADVICE flagged live here so they
-are fixed once for all five:
+are fixed once for all six:
 
 * **Cache key**: sf_dir alone is NOT identity — a second SparkSession in the
   same process has a fresh in-memory catalog, so an sf_dir-only memo would

@@ -18,25 +18,12 @@ from pyspark.sql import SparkSession
 # default (HDFSBackedStateStoreProvider) keeps every key in executor heap;
 # RocksDB spills to local disk + supports changelog checkpointing, which is
 # what survives 100 TB-scale streaming state. Results are backend-independent
-# (streaming_rocksdb_window value-checks that against the same oracle).
+# (streaming_rocksdb_window value-checks that against the same oracle). The
+# streaming runner sets it per query start, never for the whole session.
 ROCKSDB_STATE_STORE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming."
     "state.RocksDBStateStoreProvider"
 )
-
-
-def enable_rocksdb_state_store(spark: SparkSession) -> None:
-    """Switch subsequently-started streaming queries to the RocksDB state
-    store (runtime conf — applies per query start, not per session build)."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        ROCKSDB_STATE_STORE_PROVIDER,
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled",
-        "true",
-    )
 
 
 def get_spark(
@@ -44,7 +31,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state_store: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for columnar analytics.
 
@@ -89,6 +75,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if rocksdb_state_store:
-        enable_rocksdb_state_store(spark)
     return spark

@@ -16,47 +16,37 @@ plain join — bucketing must be invisible in the values.
 
 from __future__ import annotations
 
-import os
-import threading
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..llmdata.indexcache import drop_table, get_or_build, table_tag
 
 N_BUCKETS = 8
-_lock = threading.Lock()
-_prepared: dict[str, bool] = {}
 
 
 def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write orders/lineitem bucketed on the order key (once per sf_dir)."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
+    """Write orders/lineitem bucketed on the order key (once per session's
+    application and sf_dir, through the shared stored-index cache)."""
+    tag = table_tag(sf_dir)
     ot, lt = f"orders_b_{tag}", f"lineitem_b_{tag}"
-    with _lock:
-        if not _prepared.get(sf_dir):
-            # a previous process may have left the managed location behind
-            # with no catalog entry → LOCATION_ALREADY_EXISTS on saveAsTable
-            import shutil
-            from urllib.parse import urlparse
 
-            wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-            for t in (ot, lt):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-                if wh:
-                    shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderdate", "o_totalprice"
-            ).write.mode("overwrite").bucketBy(N_BUCKETS, "o_orderkey").sortBy(
-                "o_orderkey"
-            ).saveAsTable(ot)
-            load_table(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_extendedprice", "l_quantity"
-            ).write.mode("overwrite").bucketBy(N_BUCKETS, "l_orderkey").sortBy(
-                "l_orderkey"
-            ).saveAsTable(lt)
-            _prepared[sf_dir] = True
-    return ot, lt
+    def build() -> tuple[str, str]:
+        for t in (ot, lt):
+            drop_table(spark, t)
+        load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderdate", "o_totalprice"
+        ).write.mode("overwrite").bucketBy(N_BUCKETS, "o_orderkey").sortBy(
+            "o_orderkey"
+        ).saveAsTable(ot)
+        load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_quantity"
+        ).write.mode("overwrite").bucketBy(N_BUCKETS, "l_orderkey").sortBy(
+            "l_orderkey"
+        ).saveAsTable(lt)
+        return ot, lt
+
+    return get_or_build(spark, "orders_lineitem_b", sf_dir, build)
 
 
 def bucketed_join_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 import pandas as pd
@@ -41,7 +42,13 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
-from .pipelines import _events_stream, _run_to_memory, _stream_conf, replay_dir
+from .pipelines import (
+    _ROCKSDB_CONF,
+    _events_stream,
+    _query_name,
+    _run_stream,
+    _run_to_memory,
+)
 
 
 class ProgressCollector(StreamingQueryListener):
@@ -76,39 +83,31 @@ def run_concurrent_bronze_silver(
     progress. Returns (bronze, silver, listener). Each query re-reads the
     source independently, exactly like the reference's two writeStream
     branches (SURVEY §3.1 step 3)."""
+    bronze_dir = tempfile.mkdtemp(prefix="spark_graft_bronze_")
+    bronze_name, silver_name = _query_name("bronze_raw_"), _query_name("silver_agg_t9_")
+    bronze_src = _events_stream(spark, sf_dir).select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    silver_agg = (
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "15 minutes"), "event_type")
+        .agg(F.count("*").alias("n_events"))
+    )
     listener = ProgressCollector()
     spark.streams.addListener(listener)
+    runs = [
+        (bronze_src, lambda w: w.format("parquet").option("path", bronze_dir)
+            .queryName(bronze_name)),
+        (silver_agg, lambda w: w.outputMode("append").format("memory")
+            .queryName(silver_name)),
+    ]
     try:
-        bronze_dir = tempfile.mkdtemp(prefix="spark_graft_bronze_")
-        with _stream_conf(spark, sf_dir):
-            bronze_q = (
-                _events_stream(spark, sf_dir)
-                .select("event_id", "ts", "user_id", "event_type", "value")
-                .writeStream.format("parquet")
-                .option("path", bronze_dir)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="spark_graft_chk_"))
-                .queryName("bronze_raw")
-                .trigger(availableNow=True)
-                .start()
-            )
-            silver_agg = (
-                _events_stream(spark, sf_dir)
-                .withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "15 minutes"), "event_type")
-                .agg(F.count("*").alias("n_events"))
-            )
-            silver_q = (
-                silver_agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName("silver_agg_t9")
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="spark_graft_chk_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            # reference: spark.streams.awaitAnyTermination() in a loop; both
-            # queries are availableNow so awaiting each is equivalent and exact
-            bronze_q.awaitTermination()
-            silver_q.awaitTermination()
+        # reference: spark.streams.awaitAnyTermination() over both queries;
+        # each availableNow run is awaited on its own thread, so both run
+        # concurrently and the pair ends when the later one does
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            list(pool.map(lambda run: _run_stream(run[0], sf_dir, run[1]), runs))
         # listener events are delivered asynchronously; drain before detach
         deadline = time.time() + 10
         while len(listener.terminated) < 2 and time.time() < deadline:
@@ -116,7 +115,7 @@ def run_concurrent_bronze_silver(
     finally:
         spark.streams.removeListener(listener)
     bronze = spark.read.parquet(bronze_dir)
-    silver = spark.table("silver_agg_t9").select(
+    silver = spark.table(silver_name).select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         "event_type",
@@ -222,15 +221,14 @@ def transform_with_state_type_counts(spark: SparkSession, sf_dir: str) -> DataFr
     one row for each event_type updated in that batch.
 
     Requires the RocksDB state store (the API's only supported backend);
-    the provider conf is scoped-and-restored like streaming_rocksdb_window.
+    the provider conf is set for this query's start only, like
+    streaming_rocksdb_window.
     The replay source feeds one time-slice per trigger, so the slice ordinal
     is recoverable from event time and the whole run is value-checkable in
     DuckDB (a running SUM() window over per-slice counts)."""
     import datetime as _dt
 
     from pyspark.sql.streaming import StatefulProcessor
-
-    from ..session import ROCKSDB_STATE_STORE_PROVIDER
 
     ev = load_table(spark, sf_dir, "events")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
@@ -272,22 +270,13 @@ def transform_with_state_type_counts(spark: SparkSession, sf_dir: str) -> DataFr
         def close(self) -> None:
             pass
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, ROCKSDB_STATE_STORE_PROVIDER)
-    try:
-        stream = _events_stream(spark, sf_dir).select(
-            "ts", "user_id", "event_type"
-        )
-        out = stream.groupBy("user_id").transformWithStateInPandas(
-            TypeCounts(), _TWS_OUT, "update", "none"
-        )
-        return _run_to_memory(out, "update", sf_dir, python_stateful=True)
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
+    stream = _events_stream(spark, sf_dir).select("ts", "user_id", "event_type")
+    out = stream.groupBy("user_id").transformWithStateInPandas(
+        TypeCounts(), _TWS_OUT, "update", "none"
+    )
+    return _run_to_memory(
+        out, "update", sf_dir, python_stateful=True, conf=_ROCKSDB_CONF
+    )
 
 
 def tws_type_counts_batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,13 +42,15 @@ import shutil
 import tempfile
 import threading
 import time
-from contextlib import contextmanager
+from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import load_table
 from ..functions.exact import dec_sum
+from ..session import ROCKSDB_STATE_STORE_PROVIDER
 
 WATERMARK = "10 minutes"
 WINDOW = "15 minutes"
@@ -128,6 +130,10 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_slices: int = N_SLICES) -> st
 # cluster-sized count and only tiny replays shrink.
 _STREAM_STATE_PARTITION_BYTES = 64 << 20  # advisory per-partition batch input
 _STREAM_MIN_PARTITIONS = 4  # parallelism floor for state ops
+_start_lock = threading.Lock()
+_ROCKSDB_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": ROCKSDB_STATE_STORE_PROVIDER
+}
 
 
 def _stream_shuffle_partitions(
@@ -135,10 +141,8 @@ def _stream_shuffle_partitions(
 ) -> int:
     """Streaming shuffle-partition (= state-partition) count for the replay
     streams: ceil(bytes-per-micro-batch / 64 MiB), clamped to
-    [_STREAM_MIN_PARTITIONS, session shuffle.partitions]. Overridable via
-    SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS (parameterised per the
-    optimization brief; production keeps the session/cluster value because
-    the byte-derived count exceeds it).
+    [_STREAM_MIN_PARTITIONS, session shuffle.partitions]. Production keeps
+    the session/cluster value because the byte-derived count exceeds it.
 
     python_stateful: applyInPandasWithState/transformWithStateInPandas runs
     are CPU-bound at the Python boundary (per-group pandas calls), so their
@@ -146,9 +150,6 @@ def _stream_shuffle_partitions(
     measured (sf0.1, local[32]): stateful_running_vwap 10-14.6 s at 4
     partitions, 6.6-6.8 s at 16 (= cores/2), 9.3-14.2 s at 32 (state-commit
     fixed cost re-dominates past the boundary's useful parallelism)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         rd = replay_dir(spark, sf_dir)
@@ -169,27 +170,6 @@ def _stream_shuffle_partitions(
     return max(floor, min(session_parts, derived))
 
 
-@contextmanager
-def _stream_conf(
-    spark: SparkSession, sf_dir: str, python_stateful: bool = False
-):
-    """Scope spark.sql.shuffle.partitions to a streaming run (the value is
-    captured per query start; every query here uses a fresh checkpoint, so
-    no stored state pins an older count). Restored afterwards so batch
-    queries keep the session's cluster-sized value. Results are partition-
-    count independent (exact decimal sums; the determinism suite sweeps
-    partitionings), so only the state-store commit overhead changes."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key, str(_stream_shuffle_partitions(spark, sf_dir, python_stateful))
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_schema = load_table(spark, sf_dir, "events").schema
     return (
@@ -199,37 +179,84 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_name(prefix: str = "q") -> str:
+    return f"{prefix}{next(_uniq)}_{os.getpid()}"
+
+
+def _run_stream(
+    stream_df: DataFrame,
+    sf_dir: str,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    python_stateful: bool = False,
+    conf: dict[str, str] | None = None,
+) -> StreamingQuery:
+    """Run ``stream_df`` availableNow to completion: the one start path of
+    the engine's streams (T3, T5). ``sink`` configures the writer (format,
+    mode, query name or foreachBatch). The run's fresh checkpoint is removed
+    once the query has terminated; sink output stays, since the returned
+    DataFrames read it lazily. Returns the terminated query, so callers can
+    read ``recentProgress``.
+
+    The derived ``spark.sql.shuffle.partitions`` (_stream_shuffle_partitions)
+    and ``conf`` are set only around ``start()``, under a module lock, and
+    restored right after: confs are captured at ``start()``, where the query
+    clones the session for its micro-batches, so the stream keeps them while
+    the session (batch work on other threads, foreachBatch code reading the
+    outer session) sees its own values. A per-run ``spark.newSession()``
+    would need no swap, but a listener on the parent session gets none of
+    its progress events and its memory tables are invisible to the parent.
+    Results do not depend on the partition count (exact decimal sums), only
+    the state-commit overhead does."""
+    spark = stream_df.sparkSession
+    chk = tempfile.mkdtemp(prefix="spark_graft_chk_")
+    try:
+        writer = (
+            sink(stream_df.writeStream)
+            .option("checkpointLocation", chk)
+            .trigger(availableNow=True)
+        )
+        with _start_lock:
+            run_conf = {
+                "spark.sql.shuffle.partitions": str(
+                    _stream_shuffle_partitions(spark, sf_dir, python_stateful)
+                ),
+                **(conf or {}),
+            }
+            prev = {k: spark.conf.get(k, None) for k in run_conf}
+            for k, v in run_conf.items():
+                spark.conf.set(k, v)
+            try:
+                q = writer.start()
+            finally:
+                for k, v in prev.items():
+                    if v is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, v)
+        q.awaitTermination()
+        return q
+    finally:
+        shutil.rmtree(chk, ignore_errors=True)
+
+
 def _run_to_memory(
     stream_df: DataFrame,
     mode: str,
-    sf_dir: str | None = None,
+    sf_dir: str,
     python_stateful: bool = False,
+    conf: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Run a streaming DF to completion into a memory sink; return the result
-    as a batch DF. Fresh checkpoint + query name per invocation (T5). With
-    sf_dir, the run executes under the scale-adaptive streaming partition
-    count (_stream_conf)."""
-    spark = stream_df.sparkSession
-    name = f"q{next(_uniq)}_{os.getpid()}"
-    chk = tempfile.mkdtemp(prefix="spark_graft_chk_")
-
-    def run() -> None:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    if sf_dir is None:
-        run()
-    else:
-        with _stream_conf(spark, sf_dir, python_stateful):
-            run()
-    return spark.table(name)
+    """Run a streaming DF to completion into a memory sink under a fresh
+    query name; return the result as a batch DF."""
+    name = _query_name()
+    _run_stream(
+        stream_df,
+        sf_dir,
+        lambda w: w.outputMode(mode).format("memory").queryName(name),
+        python_stateful,
+        conf,
+    )
+    return stream_df.sparkSession.table(name)
 
 
 # --- T1+T2: tumbling window agg with watermark, append mode -----------------
@@ -271,17 +298,21 @@ def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_window_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same window agg in complete mode — no watermark eviction, the final
     result table equals the batch groupBy(window) exactly."""
+    return _complete_window_counts(spark, sf_dir)
+
+
+def _complete_window_counts(
+    spark: SparkSession, sf_dir: str, conf: dict[str, str] | None = None
+) -> DataFrame:
     agg = (
         _events_stream(spark, sf_dir)
         .groupBy(F.window("ts", WINDOW), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            dec_sum("value").alias(
-                "total_value"
-            ),
+            dec_sum("value").alias("total_value"),
         )
     )
-    out = _run_to_memory(agg, "complete", sf_dir)
+    out = _run_to_memory(agg, "complete", sf_dir, conf=conf)
     return out.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
@@ -359,21 +390,13 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, "user_id")
     )
     sink = tempfile.mkdtemp(prefix="spark_graft_sink_")
-    chk = tempfile.mkdtemp(prefix="spark_graft_chk_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # isEmpty() not count(): count() is a full extra job (SURVEY §4.1)
         if not batch_df.isEmpty():
             batch_df.write.mode("append").parquet(sink)
 
-    with _stream_conf(spark, sf_dir):
-        q = (
-            joined.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(joined, sf_dir, lambda w: w.foreachBatch(write_batch))
     return spark.read.parquet(sink).select(
         "event_id", "user_id", "ts", "event_type", "value", "c_name", "c_mktsegment"
     )
@@ -402,7 +425,6 @@ def streaming_upsert_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     base = tempfile.mkdtemp(prefix="spark_graft_view_")
-    chk = tempfile.mkdtemp(prefix="spark_graft_chk_")
     state: dict[str, str | None] = {"dir": None}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -421,15 +443,9 @@ def streaming_upsert_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             keep.unionByName(batch_df).write.mode("overwrite").parquet(new_dir)
         state["dir"] = new_dir
 
-    with _stream_conf(spark, sf_dir):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(
+        agg, sf_dir, lambda w: w.outputMode("update").foreachBatch(merge_batch)
+    )
     assert state["dir"] is not None, "replay produced no batches"
     return spark.read.parquet(state["dir"])
 
@@ -443,7 +459,15 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     full availableNow replay every qualifying pair is eventually emitted, so
     the oracle is the plain SQL range join — streaming buffering semantics
     checked value-level."""
-    left = (
+    return _run_to_memory(
+        _click_purchase_join(spark, sf_dir, "inner"), "append", sf_dir
+    )
+
+
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases within the following hour,
+    both sides watermarked so the time bound lets Spark evict join state."""
+    clicks = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
         .select(
@@ -453,7 +477,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("click_ts", WATERMARK)
     )
-    right = (
+    purchases = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
@@ -464,39 +488,15 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", WATERMARK)
     )
-    joined = left.join(
-        right,
+    return clicks.join(
+        purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts", "purchase_value")
-    return _run_to_memory(joined, "append", sf_dir)
-
-
-def _click_purchase_sides(spark: SparkSession, sf_dir: str):
-    left = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
+        how,
+    ).select(
+        "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts", "purchase_value"
     )
-    right = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", WATERMARK)
-    )
-    return left, right
 
 
 def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,17 +509,9 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
     matched pairs unconditionally, plus unmatched clicks with
     click_ts + 1h < min(max click_ts, max purchase_ts) − 10min (the final
     global watermark = min over sources of per-source max − delay)."""
-    left, right = _click_purchase_sides(spark, sf_dir)
-    joined = left.join(
-        right,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select(
-        "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts", "purchase_value"
+    return _run_to_memory(
+        _click_purchase_join(spark, sf_dir, "leftOuter"), "append", sf_dir
     )
-    return _run_to_memory(joined, "append", sf_dir)
 
 
 # --- extension: streaming dedup within watermark -----------------------------
@@ -540,40 +532,11 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- T8: RocksDB state store — same agg, different state backend -------------
 def streaming_rocksdb_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete-mode window agg run on the RocksDB state store
-    (session.enable_rocksdb_state_store). State backends must be
-    result-invisible, so this shares streaming_window_complete's oracle —
-    a value-level check that switching the 100 TB state backend changes
-    nothing but capacity. The provider conf is restored afterwards so the
-    session's other streaming queries keep their configured backend."""
-    from ..session import ROCKSDB_STATE_STORE_PROVIDER
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_STATE_STORE_PROVIDER)
-    try:
-        agg = (
-            _events_stream(spark, sf_dir)
-            .groupBy(F.window("ts", WINDOW), "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                dec_sum("value").alias("total_value"),
-            )
-        )
-        out = _run_to_memory(agg, "complete", sf_dir)
-        # materialize while the provider conf is still in force: the memory
-        # table is lazily backed by the streaming result, already final here
-        return out.select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    (session.ROCKSDB_STATE_STORE_PROVIDER, set for this query's start only).
+    State backends must be result-invisible, so this shares
+    streaming_window_complete's oracle — a value-level check that switching
+    the 100 TB state backend changes nothing but capacity."""
+    return _complete_window_counts(spark, sf_dir, _ROCKSDB_CONF)
 
 
 # --- S11: console sink (debug surface) ---------------------------------------
@@ -585,17 +548,14 @@ def console_sink_debug(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, returned as a 1-row DataFrame (value-checked against the
     events table)."""
     sdf = _events_stream(spark, sf_dir).select("event_id", "ts", "event_type")
-    chk = tempfile.mkdtemp(prefix="spark_graft_console_chk_")
-    q = (
-        sdf.writeStream.outputMode("append")
+    q = _run_stream(
+        sdf,
+        sf_dir,
+        lambda w: w.outputMode("append")
         .format("console")
         .option("numRows", 3)
-        .option("truncate", "true")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
+        .option("truncate", "true"),
     )
-    q.awaitTermination()
     total = sum(
         int(p["numInputRows"]) for p in (q.recentProgress or []) if p
     )
@@ -638,16 +598,6 @@ WHERE window_end <= (SELECT max(ts) FROM events) - INTERVAL '10 minutes'
 """,
     # complete mode: plain batch equivalence
     "streaming_window_complete": """
-SELECT time_bucket(INTERVAL '15 minutes', ts) AS window_start,
-       time_bucket(INTERVAL '15 minutes', ts) + INTERVAL '15 minutes' AS window_end,
-       event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(27,2))) AS DOUBLE) AS total_value
-FROM events GROUP BY 1, 2, 3
-""",
-    # T8: the state backend must be result-invisible — same oracle as the
-    # default-provider complete-mode agg
-    "streaming_rocksdb_window": """
 SELECT time_bucket(INTERVAL '15 minutes', ts) AS window_start,
        time_bucket(INTERVAL '15 minutes', ts) + INTERVAL '15 minutes' AS window_end,
        event_type,
@@ -740,6 +690,10 @@ SELECT event_id, user_id, event_type, value FROM events
 """,
 }
 
+# T8: the state backend must be result-invisible — same oracle as the
+# default-provider complete-mode agg
+ORACLE["streaming_rocksdb_window"] = ORACLE["streaming_window_complete"]
+
 ORACLE["streaming_upsert_view"] = """
 SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type,
        count(*) AS n_events,
@@ -769,7 +723,6 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _events_stream(spark, sf_dir).select("user_id")
     sink = tempfile.mkdtemp(prefix="spark_graft_cms_")
-    chk = tempfile.mkdtemp(prefix="spark_graft_chk_")
 
     def write_partial(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -781,14 +734,7 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial = occ.groupBy("j", "bucket").agg(F.count("*").alias("cnt"))
         partial.write.mode("append").parquet(sink)
 
-    with _stream_conf(spark, sf_dir):
-        q = (
-            stream.writeStream.foreachBatch(write_partial)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(stream, sf_dir, lambda w: w.foreachBatch(write_partial))
     grid = (
         spark.read.parquet(sink)
         .groupBy("j", "bucket")

@@ -16,11 +16,13 @@ def test_concurrent_queries_and_listener(spark, sf_dir):
     # bronze raw append preserved every source row exactly once
     assert bronze.count() == load_table(spark, sf_dir, "events").count()
     assert silver.count() > 0
-    # listener saw both queries start and progress (push-based monitor, T9)
-    assert "bronze_raw" in listener.started
-    assert "silver_agg_t9" in listener.started
+    # listener saw both queries start and progress (push-based monitor, T9);
+    # names are unique per call, so overlapping calls never collide
+    bronze_name, silver_name = sorted(listener.started)
+    assert bronze_name.startswith("bronze_raw_")
+    assert silver_name.startswith("silver_agg_t9_")
     names_progressed = {n for n, _ in listener.progressed}
-    assert {"bronze_raw", "silver_agg_t9"} <= names_progressed
+    assert {bronze_name, silver_name} <= names_progressed
     # termination events are delivered asynchronously
     deadline = time.time() + 15
     while len(listener.terminated) < 2 and time.time() < deadline:

@@ -11,16 +11,13 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 from stockmarket_bigdata_project_spark.streaming import pipelines as P
 
 
-def test_stream_shuffle_partitions_derivation(spark, sf_dir, monkeypatch):
+def test_stream_shuffle_partitions_derivation(spark, sf_dir):
     """Byte-derived count: floored for parallelism, capped by the session's
     configured (cluster-sized) value — a tiny replay shrinks state
     partitions, a 100 TB stream keeps the session count."""
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = P._stream_shuffle_partitions(spark, sf_dir)
     assert P._STREAM_MIN_PARTITIONS <= n
@@ -33,13 +30,10 @@ def test_stream_shuffle_partitions_derivation(spark, sf_dir, monkeypatch):
     )
 
 
-def test_stream_shuffle_partitions_python_stateful_floor(
-    spark, sf_dir, monkeypatch
-):
+def test_stream_shuffle_partitions_python_stateful_floor(spark, sf_dir):
     """Python-stateful runs (applyInPandasWithState) are CPU-bound at the
     Arrow boundary: their floor scales with cores (cores//2), still capped
     by the session's configured count."""
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cores = spark.sparkContext.defaultParallelism
     n = P._stream_shuffle_partitions(spark, sf_dir, python_stateful=True)
@@ -48,31 +42,6 @@ def test_stream_shuffle_partitions_python_stateful_floor(
     )
     assert n >= expected_floor
     assert n <= max(expected_floor, session_parts)
-
-
-def test_stream_shuffle_partitions_env_override(spark, sf_dir, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "13")
-    assert P._stream_shuffle_partitions(spark, sf_dir) == 13
-    assert (
-        P._stream_shuffle_partitions(spark, sf_dir, python_stateful=True)
-        == 13
-    )
-
-
-def test_stream_conf_scopes_and_restores(spark, sf_dir, monkeypatch):
-    """The lowered count applies only inside the scope; the session's batch
-    value is restored even on error."""
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    with P._stream_conf(spark, sf_dir):
-        inside = spark.conf.get(key)
-        assert inside == str(P._stream_shuffle_partitions(spark, sf_dir))
-    assert spark.conf.get(key) == before
-    with pytest.raises(RuntimeError):
-        with P._stream_conf(spark, sf_dir):
-            raise RuntimeError("boom")
-    assert spark.conf.get(key) == before
 
 
 def test_replay_dir_slices_are_mtime_ordered_and_complete(spark, sf_dir):

@@ -1,11 +1,12 @@
 """Round-15 streaming decomposition workbench (guide §1: measure first).
 
 Rebuilds the stream-stream join pair (and optionally other streaming
-queries) exactly as the engine declares them, runs them to a memory sink,
-and prints the per-micro-batch StreamingQueryProgress decomposition:
+queries) exactly as the engine declares them, runs them to a memory sink
+through the engine's own runner (``pipelines._run_stream``, so at the
+engine's derived state-partition count), and prints the per-micro-batch StreamingQueryProgress decomposition:
 durationMs (addBatch / getBatch / latestOffset / queryPlanning / walCommit /
 commitOffsets) plus the stateOperators metrics (numRowsTotal, commit times,
-memory) — the evidence base for VERDICT r14 task 4 (trigger/watermark wait
+memory, numShufflePartitions) — the evidence base for VERDICT r14 task 4 (trigger/watermark wait
 vs compute, and the state-rows-bounded-by-watermark excerpt).
 
 Nothing here feeds the bench artifact — it is a workbench.
@@ -19,27 +20,20 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 from stockmarket_bigdata_project_spark.session import get_spark
 from stockmarket_bigdata_project_spark.streaming import pipelines as P
 
 
-def _run_traced(stream_df, mode: str, label: str):
-    spark = stream_df.sparkSession
-    name = f"prof_{label}_{int(time.time() * 1000) % 10**9}"
-    chk = tempfile.mkdtemp(prefix="spark_graft_profchk_")
+def _run_traced(stream_df, sf_dir: str, label: str):
+    name = P._query_name(f"prof_{label}_")
     start = time.perf_counter()
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
+    q = P._run_stream(
+        stream_df,
+        sf_dir,
+        lambda w: w.outputMode("append").format("memory").queryName(name),
     )
-    q.awaitTermination()
     wall = time.perf_counter() - start
     print(f"== {label}: wall {wall:.3f}s, {len(q.recentProgress)} progress events")
     agg: dict[str, float] = {}
@@ -64,8 +58,14 @@ def _run_traced(stream_df, mode: str, label: str):
             f"durations={json.dumps(dm)} state={srows}"
         )
     print(f"  TOTAL durationMs by phase: {json.dumps({k: round(v, 3) for k, v in sorted(agg.items(), key=lambda kv: -kv[1])})}")
-    n_parts = stream_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    print(f"  (spark.sql.shuffle.partitions={n_parts})")
+    n_parts = sorted(
+        {
+            o["numShufflePartitions"]
+            for p in q.recentProgress
+            for o in p.get("stateOperators") or []
+        }
+    )
+    print(f"  (stateOperators numShufflePartitions={n_parts})")
     return wall
 
 
@@ -80,39 +80,8 @@ def main() -> None:
     print(f"replay_dir (one-time): {time.perf_counter() - t0:.3f}s")
 
     for _ in range(reps):
-        left, right = P._click_purchase_sides(spark, sf_dir)
-        import pyspark.sql.functions as F
-
-        joined = left.join(
-            right,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")
-            ),
-            "inner",
-        ).select(
-            "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts",
-            "purchase_value",
-        )
-        _run_traced(joined, "append", "ss_join_inner")
-
-        left2, right2 = P._click_purchase_sides(spark, sf_dir)
-        joined2 = left2.join(
-            right2,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")
-            ),
-            "leftOuter",
-        ).select(
-            "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts",
-            "purchase_value",
-        )
-        _run_traced(joined2, "append", "ss_join_left")
+        for how, label in (("inner", "ss_join_inner"), ("leftOuter", "ss_join_left")):
+            _run_traced(P._click_purchase_join(spark, sf_dir, how), sf_dir, label)
 
 
 if __name__ == "__main__":
