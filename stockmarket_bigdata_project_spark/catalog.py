@@ -63,7 +63,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # partitioning-independent (test_determinism's 32-vs-7 sweep + the value
 # oracle), so fan-out cannot change any result.
 _FANOUT_MIN_BYTES = 256 * 1024
-_FANOUT_DISABLED = os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0"
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -85,8 +84,6 @@ def _size_conf_bytes(value: str, default: int = 134217728) -> int:
 
 
 def _maybe_fanout(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    if _FANOUT_DISABLED:
-        return df
     try:
         size = os.path.getsize(path)
     except OSError:

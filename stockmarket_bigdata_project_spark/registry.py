@@ -4,11 +4,24 @@ Every operator module exposes ``QUERIES`` (name → (spark, sf_dir) → DataFram
 and ``ORACLE`` (name → equivalent DuckDB SQL; absent for genuinely
 non-SQL-expressible operators → driver records a rows-only check).
 This module merges them and is the single source for ``__spark_entry__``.
+
+The external correctness gate checks the first 50 names of the registry each
+round. Their order is data: ``query_order.txt`` holds every registered name,
+one per line, so adding a query is a one-line diff (a registered name missing
+from it fails loud, like a broken module). The one dynamic rule is
+red-fronting: an oracle query whose row in the latest ``CORRECTNESS_r{N}.json``
+failed its hash or errored moves to the front, so the next window proves its
+fix. Rows-only queries (``err: "no_oracle"``) have no fix to prove and keep
+their place.
 """
 
 from __future__ import annotations
 
+import glob
 import importlib
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,307 +74,47 @@ def _modules():
     ]
 
 
-# The external correctness gate verifies a bounded prefix of this registry
-# (each round records exactly the first 50 entries). Queries already proven
-# there (hash_match=true in CORRECTNESS_r{N}.json) are rotated to the back so
-# each round's budget lands on fixes and not-yet-verified queries first; over
-# rounds the whole registry accumulates value-level proof. Proof state is
-# derived ENTIRELY from the recorded CORRECTNESS files on disk (the static
-# per-round transcriptions retired in round 5 were redundant copies of the
-# same state and could drift).
-
-# Module ranking for the UNPROVEN tier. Round-5 window composition (the 85
-# still-unproven oracle queries close over rounds 5-6): the reference-facing
-# surfaces a user hits first — sources, ml inference/eval, scalar/text
-# functions, finance, streaming lifecycle, serving — land in round 5's 50
-# slots (r4 verdict task 1); the llmdata/streaming remainder follows in
-# round 6. Modules not listed rank last, in registration order.
-_FRONT_MODULE_ORDER = (
-    "sources.readers", "sources.pyds", "sources.sinks", "sources.bucketing",
-    "ml", "functions.text", "functions.scalar", "functions.pyudf",
-    "operators.finance", "streaming.lifecycle", "serving",
-    "operators.features", "operators.stats", "operators.timeseries",
-    "operators.analytics", "operators.decision_support", "operators.linkage",
-    "operators.sketches", "streaming.pipelines", "llmdata.lm",
-    "llmdata.graph", "llmdata.clustering", "llmdata.textstats",
-    "llmdata.corpus", "llmdata.sampling", "llmdata.similarity",
-    "llmdata.dedup", "llmdata.decontam", "llmdata.multimodal",
-)
-
-# Queries introduced AFTER the round-4 results were recorded: they queue
-# behind the pre-existing unproven tier so they cannot displace the planned
-# round-5/6 proof windows (same protection _INTRODUCED_LATE_R3 gave round 3;
-# the set rolls forward each round once its members are recorded).
-_INTRODUCED_R5: frozenset[str] = frozenset(
-    {"line_dedup_stats", "pq_codes", "pq_adc_topk", "pq_rerank_topk",
-     "pq_eval_recall", "induced_stopword_density"}
-)
-
-# Queries introduced during round 6: rank after _INTRODUCED_R5 so the round-7
-# closure window (the 16 remaining oracle + 7 rows-only queries pinned in
-# COVERAGE.md) cannot be queue-jumped. 16 + 7 + |_INTRODUCED_R6| must stay
-# ≤ 50 for round 7 to close the whole registry (tests/test_registry.py pins
-# this bound).
-_INTRODUCED_R6: frozenset[str] = frozenset()
-
-# Queries introduced during round 7: rank after everything pre-existing so
-# the pinned closure set keeps positions 1-23; with 23 pending closure +
-# |_INTRODUCED_R7| ≤ 50 the whole registry still closes in the round-7
-# window (tests/test_registry.py bounds this).
-_INTRODUCED_R7: frozenset[str] = frozenset({
-    "tws_type_counts_batch_twin",
-    "jsonl_scan_roundtrip",
-    "source_quality_report",
-    "corpus_token_histogram",
-    "lateral_topn_orders",
-    "lsh_eval_precision_recall",
-    "sql_udf_order_tiers",
-    "collated_distinct_counts",
-    "minhash_band_skew_report",
-    "dup_cluster_size_histogram",
-    "simhash_distance_eval",
-    "atr_bands_exact",
-    "source_token_budget_curve",
-    "zorder_skipping_report",
-    "skyline_two_phase_orders",
-    "candlestick_patterns",
-    "trading_gap_report",
-    "leadlag_xcorr",
-    "unimax_language_budgets",
-    "try_arithmetic_functions",
-    "sparse_cosine_pairs",
-    "ngram_novelty_score",
-    "rolling_weekly_active_users",
-    "minhash_containment_pairs",
-    "edit_distance_verified_pairs",
-    "obv_indicator",
-})
+_HERE = os.path.dirname(os.path.abspath(__file__))
+_ORDER_FILE = os.path.join(_HERE, "query_order.txt")
+_RECORD_GLOB = os.path.join(os.path.dirname(_HERE), "CORRECTNESS_r*.json")
 
 
-# Queries introduced during round 8 (the registry entered round 8 fully
-# proven, so these tier-0 entries front the window and earn their proof
-# immediately; everything else in the window is re-proof rotation).
-_INTRODUCED_R8: frozenset[str] = frozenset({
-    "semdedup_survivors_ann",
-    "lsh_capped_buckets_report",
-    "source_shingle_overlap",
-    "decontam_fuzzy_pairs",
-    "dedup_aware_shards",
-    "incremental_minhash_new_docs",
-})
-
-# Queries introduced during round 9 (tier-0 unproven: they front the window
-# and earn their proof immediately; the registry entered round 9 fully
-# proven otherwise).
-_INTRODUCED_R9: frozenset[str] = frozenset({
-    "incremental_minhash_indexed",
-    "dedup_aware_shards_bucketed",
-    "incremental_semdedup_new_docs",
-    "incremental_semdedup_indexed",
-    "incremental_decontam_indexed",
-    "incremental_dedup_indexed",
-})
-
-# Queries introduced during round 13 (tier-0 unproven: they front the
-# window and earn their proof immediately; the registry entered round 13
-# fully proven otherwise).
-_INTRODUCED_R13: frozenset[str] = frozenset({
-    "quality_calibration_buckets",
-    "direction_auc",
-})
-
-# Queries introduced during round 14 (tier-0 unproven: they front the
-# window and earn their proof immediately; the registry entered round 14
-# fully proven otherwise).
-_INTRODUCED_R14: frozenset[str] = frozenset({
-    "hot_key_rollup",
-    "hot_key_rollup_salted",
-})
-
-# Introduction round → set, for the one-extra-round window hold below
-# (r14 verdict task 2): rotating a query out of the window the round after
-# it earns its proof is indistinguishable, in the driver's PERF diff, from
-# deleting it — so queries introduced in the latest RECORDED round stay in
-# the window one more round (ranked after every pending proof, before the
-# proven-rotation tier), and `queries_dropped` stays empty in steady state.
-_INTRODUCED_BY_ROUND: dict[int, frozenset[str]] = {
-    5: _INTRODUCED_R5,
-    6: _INTRODUCED_R6,
-    7: _INTRODUCED_R7,
-    8: _INTRODUCED_R8,
-    9: _INTRODUCED_R9,
-    13: _INTRODUCED_R13,
-    14: _INTRODUCED_R14,
-}
-
-# Round-8 re-proof priority (r7 verdict task 8): with every query proven,
-# the gate window re-proves old queries — spend the spare slots on the
-# FLOAT-BEARING families first (raw binary64 outputs whose cross-engine
-# bit-identity is the environment-sensitive surface), so any host/version
-# drift shows up as a red row while there is still budget to fix it.
-_REPROOF_PRIORITY = (
-    "rolling_beta",
-    "leadlag_xcorr",
-    "retrieval_eval_recall",
-    "lsh_eval_precision_recall",
-    "pq_eval_recall",
-    "ivf_pq_eval_recall",
-    "matryoshka_recall",
-    "knn_bruteforce",
-    "knn_ivf",
-    "embedding_near_dup_pairs",
-    "embedding_lsh_near_dup",
-    "embedding_range_query",
-    "label_centroid_similarity",
-    "minhash_lsh_pairs",
-    "minhash_containment_pairs",
-    "edit_distance_verified_pairs",
-    "ngram_jaccard_pairs",
-    "sparse_cosine_pairs",
-    "semdedup_survivors",
-    "correlation_matrix",
-    "predict_returns",
-    "eval_metrics",
-    "rolling_volatility",
-    "ewma_dyadic_close",
-    "trend_mann_kendall",
-)
-
-
-def _introduced_rank(name: str) -> int:
-    if name in _INTRODUCED_R14:
-        return 7
-    if name in _INTRODUCED_R13:
-        return 6
-    if name in _INTRODUCED_R9:
-        return 5
-    if name in _INTRODUCED_R8:
-        return 4
-    if name in _INTRODUCED_R7:
-        return 3
-    if name in _INTRODUCED_R6:
-        return 2
-    if name in _INTRODUCED_R5:
-        return 1
-    return 0
-
-
-# The dynamic loader reads every recorded round (r01, r02, ...) so the
-# rotation self-updates when the driver writes new results — no manual
-# re-transcription per round. Red rows from the LATEST recorded round are
-# re-fronted automatically.
-def _recorded_rounds() -> list[tuple[int, dict]]:
-    """(round, contents) for every CORRECTNESS_r{N}.json, in round order."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = []
-    for path in sorted(
-        glob.glob(os.path.join(root, "CORRECTNESS_r*.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
-    ):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-            if isinstance(data, dict):
-                out.append((int(re.search(r"_r(\d+)", path).group(1)), data))
-        except (OSError, ValueError):
-            continue  # a malformed record must not break the harness
-    return out
-
-
-def _latest_recorded_round() -> int:
-    """Highest recorded round number on disk (0 when none exist)."""
-    rounds = _recorded_rounds()
-    return rounds[-1][0] if rounds else 0
-
-
-def _dynamic_proof_state() -> tuple[frozenset[str], frozenset[str]]:
-    """(proven, red_fixes) from every recorded round on disk: proven =
-    hash_match=true in ANY round; red = hash_match=false OR a harness
-    error (err set, no hash) in the LATEST round it was attempted without
-    a later green row — an errored row needs its fix proven just as much
-    as a hash-failed one (r3: embedding_int8_quantization)."""
-    proven: set[str] = set()
-    red: set[str] = set()
-    for _round, data in _recorded_rounds():
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True:
-                proven.add(name)
-                red.discard(name)
-            elif row.get("hash_match") is False or row.get("err"):
-                red.add(name)
-                proven.discard(name)
-    return frozenset(proven), frozenset(red)
-
-
-def _rotate(items: dict, oracle_names: frozenset[str], origin: dict) -> dict:
-    """Order: red-row fixes first (their green row is the round's headline),
-    then unproven oracle-checked (each earns a value-level proof inside the
-    gate's 50-query window; _FRONT_MODULE_ORDER ranks the modules, newly
-    introduced queries queue last), then rows-only queries (their weaker
-    check costs a window slot that a hash-checkable query could use), then
-    queries already hash-proven in a recorded round. Exception (r14 verdict
-    task 2): queries introduced in the LATEST recorded round that just
-    earned their proof are held in the window one extra round (tier 1.5 —
-    after every pending proof so no slot is displaced, before the proven
-    rotation) so the driver's PERF diff sees them present, not "dropped"."""
-    proven, red_fixes = _dynamic_proof_state()
-    hold = _INTRODUCED_BY_ROUND.get(_latest_recorded_round(), frozenset())
-
-    def key(name: str):
-        if name in red_fixes:
-            # an errored/red rows-only query cannot earn a hash proof, so
-            # it must not consume a tier -1 window slot a hash-checkable
-            # fix could use — it fronts the rows-only tier instead
-            tier = -1 if name in oracle_names else 1
-        elif name in proven:
-            tier = 1.5 if name in hold else 2
-        elif name in oracle_names:
-            tier = 0
-        else:
-            tier = 1
-        mod = origin.get(name, "")
-        try:
-            mod_rank = _FRONT_MODULE_ORDER.index(mod)
-        except ValueError:
-            mod_rank = len(_FRONT_MODULE_ORDER)
-        # within the already-proven tier, re-proof the float-bearing
-        # families first (see _REPROOF_PRIORITY) — ordering inside tier 2
-        # never displaces an unproven query, it only picks WHICH proven
-        # queries the window re-checks
-        try:
-            reproof_rank = _REPROOF_PRIORITY.index(name) if tier == 2 else -1
-        except ValueError:
-            reproof_rank = len(_REPROOF_PRIORITY)
-        return (
-            tier,
-            name not in red_fixes,
-            reproof_rank,
-            _introduced_rank(name),
-            mod_rank,
-        )
-
-    return dict(sorted(items.items(), key=lambda kv: key(kv[0])))
+def _latest_record() -> dict:
+    """Rows of the highest-numbered CORRECTNESS_r{N}.json ({} when none)."""
+    rounds = {
+        int(m.group(1)): path
+        for path in glob.glob(_RECORD_GLOB)
+        if (m := re.search(r"_r(\d+)\.json$", path))
+    }
+    if not rounds:
+        return {}
+    try:
+        with open(rounds[max(rounds)]) as f:
+            data = json.load(f)
+    except (OSError, ValueError):
+        return {}  # a malformed record must not break the harness
+    return data if isinstance(data, dict) else {}
 
 
 def all_queries() -> dict[str, QueryFn]:
     out: dict[str, QueryFn] = {}
-    origin: dict[str, str] = {}
-    pkg_prefix = f"{__package__}."
     for mod in _modules():
-        short = mod.__name__.removeprefix(pkg_prefix)
         for name, fn in getattr(mod, "QUERIES", {}).items():
             if name in out:
                 raise ValueError(f"duplicate query name {name!r} in {mod.__name__}")
             out[name] = fn
-            origin[name] = short
-    return _rotate(out, frozenset(all_oracle_sql()), origin)
+    with open(_ORDER_FILE) as f:
+        rank = {name: i for i, name in enumerate(f.read().split())}
+    oracle = all_oracle_sql()
+    red = {
+        name
+        for name, row in _latest_record().items()
+        if name in oracle
+        and isinstance(row, dict)
+        and (row.get("hash_match") is False or row.get("err"))
+    }
+    order = sorted(out, key=lambda name: (name not in red, rank[name]))
+    return {name: out[name] for name in order}
 
 
 def all_oracle_sql() -> dict[str, str]:

@@ -114,7 +114,7 @@ _SENSITIVE = [
     "near_dup_triangles",  # canonicalized triangle closure over pair graph
     "bpe_train_merges",  # iterative winner picks: UTF-8-byte tie order
     "scd2_event_history",  # validity-interval windows over event order
-    # round-7 introductions (_INTRODUCED_R7), pinned before their gate window
+    # round-7 introductions, pinned before the gate window proved them
     "tws_type_counts_batch_twin",  # slice bucketing + running-sum window
     "source_quality_report",  # corpus-wide dedup window + micro-quality mean
     "corpus_token_histogram",  # integer log2 bucket rollup
@@ -122,7 +122,7 @@ _SENSITIVE = [
     "lsh_eval_precision_recall",  # candidate∩truth counts + two ratios
     "sql_udf_order_tiers",  # catalog-function tiering + decimal sums
     "collated_distinct_counts",  # binary vs UTF8_LCASE distinct counts
-    # round-7 second batch (_INTRODUCED_R7), pinned before their gate window
+    # round-7 second batch, pinned before the gate window proved them
     "minhash_band_skew_report",  # per-(band,sig) bucket-size rollup
     "dup_cluster_size_histogram",  # component sizes from iterative CC
     "simhash_distance_eval",  # bit-majority ties + pair-join rollup
@@ -130,17 +130,17 @@ _SENSITIVE = [
     "source_token_budget_curve",  # ntile cut on (micro, doc_id) order
     "zorder_skipping_report",  # sort-free z-division file envelopes
     "skyline_two_phase_orders",  # two-phase skyline: local prune + global pass
-    # round-7 third batch (_INTRODUCED_R7), pinned before their gate window
+    # round-7 third batch, pinned before the gate window proved them
     "candlestick_patterns",  # lag-pair pattern flags over the total order
     "trading_gap_report",  # lag date gaps + per-supplier rollup
     "leadlag_xcorr",  # six exact sufficient stats → shared binary64 corr
     "unimax_language_budgets",  # driver-side recurrence over collected K rows
     "try_arithmetic_functions",  # map-side error-safe projection
-    # round-7 fourth batch (_INTRODUCED_R7), pinned before their gate window
+    # round-7 fourth batch, pinned before the gate window proved them
     "sparse_cosine_pairs",  # df-capped posting join + sqrt-normalized dot
     "ngram_novelty_score",  # first-occurrence min over the shingle key
     "rolling_weekly_active_users",  # fan-out distinct count per target day
-    # round-7 fifth batch (_INTRODUCED_R7), pinned before their gate window
+    # round-7 fifth batch, pinned before the gate window proved them
     "minhash_containment_pairs",  # staged overlap stats + two int÷int ratios
     "edit_distance_verified_pairs",  # levenshtein over LSH candidates
     "obv_indicator",  # signed cumulative BIGINT volume over the total order
@@ -184,11 +184,10 @@ _SENSITIVE = [
     # per-group, partitioning-independent; pinned anyway
     "suppression_window_dedup",
     "asof_join_merge_pandas",
-    # round-13 introductions (_INTRODUCED_R13), pinned before their gate
-    # window lands them
+    # round-13 introductions, pinned before the gate window proved them
     "quality_calibration_buckets",  # micro-score deciles vs keep-rate gaps
     "direction_auc",  # midrank Mann-Whitney from per-score-group counts
-    # round-14 introductions (_INTRODUCED_R14): the constructed-skew join
+    # round-14 introductions: the constructed-skew join
     # twins — the salt (and any AQE skew split) must be invisible in values
     "hot_key_rollup",
     "hot_key_rollup_salted",

@@ -2195,3 +2195,33 @@ def test_hot_key_rollup_salted_joins_on_salt(spark, sf_dir):
         assert "BroadcastExchange" not in plan, plan
     finally:
         restore()
+
+
+def _op_count(plan: str, op: str) -> int:
+    # operator-list entries look like "+- Generate (9)"; details repeat the
+    # name as "(9) Generate" — count only the operator-list form
+    return len(re.findall(rf"\b{op} \(\d+\)", plan))
+
+
+def test_duplicate_spans_single_gram_pass(spark, sf_dir):
+    """The positional gram explode must appear ONCE (window count), not once
+    per side of an aggregate + join-back (the former shape had 2)."""
+    from stockmarket_bigdata_project_spark.llmdata.dedup import duplicate_spans
+
+    plan = _plan(duplicate_spans(spark, sf_dir))
+    assert _op_count(plan, "Generate") == 1
+    assert _op_count(plan, "Window") >= 1
+
+
+def test_winnowing_candidates_two_fingerprint_passes(spark, sf_dir):
+    """winnowing_dup_candidates: the fingerprint pipeline feeds the df-cap
+    window ONCE and the self-join references that same capped relation on
+    both sides (2 Generate total — one per self-join side; the former
+    agg+join-back shape carried a third for the df count)."""
+    from stockmarket_bigdata_project_spark.llmdata.textstats import (
+        winnowing_dup_candidates,
+    )
+
+    plan = _plan(winnowing_dup_candidates(spark, sf_dir))
+    assert _op_count(plan, "Generate") == 2
+    assert _op_count(plan, "Window") >= 1

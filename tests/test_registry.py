@@ -1,92 +1,94 @@
-"""Registry rotation invariants: the gate window (first 50 entries) must be
-spent on maximum-proof-value queries, whatever the current proof state."""
+"""Registry order invariants. The gate checks the first 50 names of
+registry.all_queries(): they come from the committed query_order.txt, with
+the latest record's red oracle queries moved to the front."""
 
 from __future__ import annotations
+
+import glob
+import json
+import os
 
 import pytest
 
 from stockmarket_bigdata_project_spark import registry
 
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def _effective_sets():
-    return registry._dynamic_proof_state()
+
+def _order_file() -> list[str]:
+    with open(registry._ORDER_FILE) as f:
+        return f.read().split()
+
+
+def _red(record: dict) -> set[str]:
+    """Oracle queries whose row in `record` failed its hash or errored."""
+    oracle = registry.all_oracle_sql()
+    return {
+        n for n, row in record.items()
+        if n in oracle and (row.get("hash_match") is False or row.get("err"))
+    }
+
+
+def test_order_file_is_a_permutation_of_registered_names():
+    order = _order_file()
+    dupes = sorted({n for n in order if order.count(n) > 1})
+    assert dupes == [], f"query_order.txt lists names twice: {dupes}"
+    # merged straight from the modules: all_queries() itself fails on a
+    # registered name the file lacks
+    registered = {n for m in registry._modules() for n in getattr(m, "QUERIES", {})}
+    assert set(order) - registered == set(), "query_order.txt names unknown queries"
+    assert registered - set(order) == set(), "registered queries missing from query_order.txt"
 
 
 def test_rotation_tiers_are_ordered():
+    """On the recorded state: the latest record's red oracle queries come
+    first, then every other name in query_order.txt order."""
     names = list(registry.all_queries())
-    oracled = set(registry.all_oracle_sql())
-    proven, red = _effective_sets()
-
-    def tier(n: str) -> int:
-        if n in red:
-            # a red rows-only query fronts the rows-only tier instead of
-            # consuming a hash-checkable fix slot (registry._rotate)
-            return -1 if n in oracled else 1
-        if n in proven:
-            return 2
-        if n in oracled:
-            return 0
-        return 1
-
-    tiers = [tier(n) for n in names]
-    assert tiers == sorted(tiers), "red fixes < unproven-oracled < rows-only < proven"
+    red = _red(registry._latest_record())
+    assert set(names[: len(red)]) == red
+    assert names[len(red):] == [n for n in _order_file() if n not in red]
 
 
-def test_window_has_no_wasted_slots():
-    """Every slot in the 50-query gate window must be value-checkable
-    (an oracle exists) unless the registry has run out of unproven
-    oracle-checked queries — rows-only checks may not consume a window
-    slot a hash-checkable query could use."""
+def test_red_oracle_row_fronts_only_the_oracle_query(monkeypatch):
+    """A hash-failed oracle row moves its query to position 0; a rows-only
+    row (err "no_oracle") has no fix to prove and keeps its place."""
+    order = _order_file()
+    oracle = registry.all_oracle_sql()
+    red = next(n for n in reversed(order) if n in oracle)
+    rows_only = next(n for n in reversed(order) if n not in oracle)
+    record = {
+        red: {"hash_match": False, "err": None},
+        rows_only: {"hash_match": None, "err": "no_oracle"},
+    }
+    monkeypatch.setattr(registry, "_latest_record", lambda: record)
     names = list(registry.all_queries())
-    oracled = set(registry.all_oracle_sql())
-    proven, _ = _effective_sets()
-    unproven_oracled = [n for n in names if n in oracled and n not in proven]
-    window = names[:50]
-    if len(unproven_oracled) >= 50:
-        assert all(n in oracled for n in window), [
-            n for n in window if n not in oracled
-        ]
+    assert names[0] == red
+    assert names[1:] == [n for n in order if n != red]
 
 
-def test_dynamic_proof_state_reads_recorded_rounds():
-    """Proof state derives ENTIRELY from the recorded CORRECTNESS files
-    (the static per-round transcriptions are retired): the loader must
-    reproduce the r1-r4 history — latest result wins per query."""
-    dyn_proven, dyn_red = registry._dynamic_proof_state()
-    assert "gold_daily_features" in dyn_proven  # green in r2
-    assert "supplier_daily_ohlcv" in dyn_proven  # green in r1
-    # red r1-r3, fixed and proven green in r4 — latest state must win
-    assert "two_level_rollup" in dyn_proven
-    assert "embedding_int8_quantization" in dyn_proven
-    # errored in r1 (rows-only, since-fixed NANOS read), never re-attempted:
-    # stays red until a recorded round shows it attempted-clean
-    assert "approx_count_distinct_users" in dyn_red
-    assert dyn_proven.isdisjoint(dyn_red)
-
-
-def _recorded_round(n: int) -> dict:
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        return json.load(f)
+def test_latest_record_is_highest_round_numerically(tmp_path, monkeypatch):
+    # unpadded names: "r9" sorts after "r10" as text, before it as a number
+    for n in (2, 9, 10):
+        (tmp_path / f"CORRECTNESS_r{n}.json").write_text(
+            json.dumps({"q": {"round": n}})
+        )
+    monkeypatch.setattr(
+        registry, "_RECORD_GLOB", str(tmp_path / "CORRECTNESS_r*.json")
+    )
+    assert registry._latest_record() == {"q": {"round": 10}}
 
 
 def test_round5_window_recorded_green():
-    """The round-5 must-have surfaces (r4 verdict task 1: sources, ml,
-    text/scalar functions, finance, streaming lifecycle, serving) are
-    recorded hash-green in CORRECTNESS_r05. File-based on purpose — the
-    previous form asserted against the LIVE rotation and self-invalidated
-    the moment the round-5 results landed and were (correctly) rotated to
-    the back (r5 verdict task 2)."""
-    recorded = _recorded_round(5)
-    if not recorded:
+    """The round-5 must-have surfaces (sources, ml, text/scalar functions,
+    finance, streaming lifecycle, serving) are recorded hash-green in
+    CORRECTNESS_r05. File-based on purpose: a form asserted against the
+    live order would go stale once those queries are proven and moved."""
+    path = os.path.join(_ROOT, "CORRECTNESS_r05.json")
+    if not os.path.exists(path):
         # a lost/missing record must surface as a visible skip, not pass
         pytest.skip("no round-5 record (CORRECTNESS_r05.json missing)")
+    with open(path) as f:
+        recorded = json.load(f)
     must_have = {
         "extract_tickers_v1", "extract_tickers_v2", "sentiment_score",
         "predict_returns", "eval_metrics", "csv_scan_events",
@@ -102,105 +104,18 @@ def test_round5_window_recorded_green():
 
 
 def test_window_composition_round_agnostic():
-    """Whatever the current proof state, the gate window (first 50) may not
-    waste a slot on an already-proven query while unproven ones wait — the
-    round-relative form of the retired per-round composition tests, valid
-    after ANY future round lands."""
-    names = list(registry.all_queries())
-    proven, red = _effective_sets()
-    pending = [n for n in names if n not in proven or n in red]
-    window = names[: min(50, len(pending))]
-    wasted = [n for n in window if n in proven and n not in red]
-    assert wasted == [], f"window wastes slots on proven queries: {wasted}"
-
-
-# The round-7 closure set, pinned so nothing introduced later queue-jumps it
-# (COVERAGE.md "Round-7 endgame"): the 16 oracle queries left unproven after
-# a clean round-6 window plus the 7 rows-only queries. Once every member is
-# recorded, the registry is fully externally proven.
-R7_CLOSURE_ORACLE = frozenset({
-    "sqrt_temperature_mixture", "split_leakage_repair", "retrieval_eval_recall",
-    "ivf_pq_topk", "matryoshka_recall", "ann_index_build",
-    "rm3_expanded_retrieval", "ivf_pq_eval_recall", "softdedup_weights",
-    "media_storage_report", "induced_stopword_density", "pq_codes",
-    "pq_adc_topk", "pq_rerank_topk", "pq_eval_recall", "line_dedup_stats",
-})
-R7_CLOSURE_ROWS_ONLY = frozenset({
-    "approx_count_distinct_users", "prediction_documents_nested",
-    "approx_quantiles_prices", "hll_distinct_users", "datasketches_hll_union",
-    "kmeans_cluster_sizes", "compression_ratio_scores",
-})
-
-
-def test_r7_closure_cannot_be_queue_jumped():
-    """Round-agnostic: any query introduced after round 5 (_INTRODUCED_R6)
-    must sort AFTER every still-unproven member of the pinned round-7
-    closure set within its tier, and the closure set + later introductions
-    must fit one 50-slot window so round 7 can close the registry."""
-    names = list(registry.all_queries())
-    proven, red = _effective_sets()
-    closure = R7_CLOSURE_ORACLE | R7_CLOSURE_ROWS_ONLY
-    assert closure <= set(names), closure - set(names)
-
-    pos = {n: i for i, n in enumerate(names)}
-    pending_closure = [n for n in closure if n not in proven or n in red]
-    late = [
-        n
-        for n in registry._INTRODUCED_R6 | registry._INTRODUCED_R7
-        if n not in proven or n in red
-    ]
-    # late oracle queries may not sort before any pending closure ORACLE
-    # query (rows-only closure members legitimately tier behind new oracle
-    # queries — their check is weaker)
-    oracled = set(registry.all_oracle_sql())
-    pending_closure_oracle = [n for n in pending_closure if n in oracled]
-    for ln in late:
-        if ln in oracled:
-            jumped = [n for n in pending_closure_oracle if pos[ln] < pos[n]]
-            assert jumped == [], f"{ln} queue-jumps closure queries: {jumped}"
-    # everything still needing proof must fit one 50-slot window
-    assert len(pending_closure) + len(late) <= 50
-
-
-def test_introduced_r6_members_are_registered():
-    names = set(registry.all_queries())
-    ghost = (
-        registry._INTRODUCED_R6
-        | registry._INTRODUCED_R7
-        | registry._INTRODUCED_R8
-        | registry._INTRODUCED_R9
-        | registry._INTRODUCED_R13
-        | registry._INTRODUCED_R14
-    ) - names
-    assert not ghost, f"late-introduction sets name unknown queries: {ghost}"
-    missing_priority = set(registry._REPROOF_PRIORITY) - names
-    assert not missing_priority, (
-        f"re-proof priority names unknown queries: {missing_priority}"
-    )
-
-
-def test_newly_proven_introductions_held_one_extra_round():
-    """r14 verdict task 2: queries introduced in the latest RECORDED round
-    that just earned their proof must stay inside the 50-query gate window
-    for one more round — rotating them out immediately reads as "dropped"
-    in the driver's PERF diff. They rank after every pending proof (no
-    displaced slot) and before the proven-rotation tier."""
-    latest = registry._latest_recorded_round()
-    hold = registry._INTRODUCED_BY_ROUND.get(latest, frozenset())
-    proven, red = _effective_sets()
-    held = [n for n in hold if n in proven and n not in red]
-    if not held:
-        pytest.skip(f"no newly-proven introductions from round {latest}")
-    names = list(registry.all_queries())
-    pos = {n: i for i, n in enumerate(names)}
-    pending = [n for n in names if n not in proven or n in red]
-    for n in held:
-        assert pos[n] < 50, f"{n} rotated out of the window too early"
-        # held queries may not displace a pending proof slot
-        assert all(pos[p] < pos[n] for p in pending), n
-    # with the r14 record as latest, the skew twins are concretely held
-    if latest == 14:
-        assert {"hot_key_rollup", "hot_key_rollup_salted"} <= set(names[:50])
+    """Whatever round was recorded last, no oracle query waits outside the
+    gate window for its proof: each either has a hash-green row in some
+    recorded round and is not red in the latest one, or sits in the first
+    50 names of query_order.txt, where the next window proves it."""
+    proven: set[str] = set()
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            proven |= {n for n, row in json.load(f).items() if row.get("hash_match") is True}
+    proven -= _red(registry._latest_record())
+    window = set(_order_file()[:50])
+    waiting = sorted(set(registry.all_oracle_sql()) - proven - window)
+    assert waiting == [], f"unproven oracle queries outside the window: {waiting}"
 
 
 def test_every_query_name_is_unique_and_resolvable():

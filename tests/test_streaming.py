@@ -15,9 +15,12 @@ window was already evicted in a PRIOR micro-batch.
 from __future__ import annotations
 
 import datetime as dt
+import os
 import time
 
 import pyspark.sql.functions as F
+
+from stockmarket_bigdata_project_spark.streaming import pipelines as P
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
@@ -28,8 +31,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     def write_slice(rows):
         # explicit strictly-increasing mtimes (the r15 replay_dir mechanism)
         # instead of 1.05 s sleeps: arrival order is the stamped order
-        import os
-
         before = set(os.listdir(replay)) if replay.exists() else set()
         spark.createDataFrame(
             [(ts, float(v)) for ts, v in rows], "ts timestamp, value double"
@@ -309,7 +310,6 @@ def test_replay_dir_leaves_only_the_replay_dir(spark, sf_dir, tmp_path):
     """A fresh replay writes each slice through its own staging dir and
     removes it after moving the part file out: the only new entry in the
     temp dir is the replay dir, holding exactly the slice files."""
-    import os
     import shutil
     import tempfile
 
@@ -344,8 +344,6 @@ def test_run_stream_scopes_confs_to_start(spark, sf_dir):
     conf only around start(): code in a foreachBatch reads the outer
     session's own values, while the stream's state operators run at the
     derived count on the requested state-store provider."""
-    from stockmarket_bigdata_project_spark.streaming import pipelines as P
-
     part_key = "spark.sql.shuffle.partitions"
     (prov_key,) = P._ROCKSDB_CONF
     session_parts, session_prov = spark.conf.get(part_key), spark.conf.get(prov_key, None)
@@ -386,7 +384,6 @@ def test_streaming_runs_remove_their_checkpoints(spark, sf_dir, tmp_path, monkey
     import tempfile
 
     from stockmarket_bigdata_project_spark.streaming import lifecycle as L
-    from stockmarket_bigdata_project_spark.streaming import pipelines as P
 
     P.replay_dir(spark, sf_dir)  # the shared replay corpus stays where it is
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -421,3 +418,63 @@ def test_concurrent_streams_and_batch_keep_session_conf(spark, sf_dir):
         concurrent = list(pool.map(rows, names))
     assert {k: spark.conf.get(k, None) for k in keys} == before
     assert concurrent == sequential
+
+
+def test_stream_shuffle_partitions_derivation(spark, sf_dir):
+    """Byte-derived count: floored for parallelism, capped by the session's
+    configured (cluster-sized) value — a tiny replay shrinks state
+    partitions, a 100 TB stream keeps the session count."""
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = P._stream_shuffle_partitions(spark, sf_dir)
+    assert P._STREAM_MIN_PARTITIONS <= n
+    assert n <= max(P._STREAM_MIN_PARTITIONS, session_parts)
+    # the sf0.001 replay is KBs — far below one 64 MiB advisory partition —
+    # so the byte derivation must bottom out at the floor, not the session
+    # value (the whole point: state-store commits cost per partition)
+    assert n == min(
+        max(P._STREAM_MIN_PARTITIONS, 1), max(P._STREAM_MIN_PARTITIONS, session_parts)
+    )
+
+
+def test_stream_shuffle_partitions_python_stateful_floor(spark, sf_dir):
+    """Python-stateful runs (applyInPandasWithState) are CPU-bound at the
+    Arrow boundary: their floor scales with cores (cores//2), still capped
+    by the session's configured count."""
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cores = spark.sparkContext.defaultParallelism
+    n = P._stream_shuffle_partitions(spark, sf_dir, python_stateful=True)
+    expected_floor = max(
+        P._STREAM_MIN_PARTITIONS, min(cores // 2, session_parts)
+    )
+    assert n >= expected_floor
+    assert n <= max(expected_floor, session_parts)
+
+
+def test_replay_dir_slices_are_mtime_ordered_and_complete(spark, sf_dir):
+    """The parallel build must preserve the replay contract: N_SLICES
+    parquet files whose modification times strictly increase in slice
+    (= event-time) order, together covering the whole events table."""
+    from stockmarket_bigdata_project_spark.catalog import load_table
+
+    rd = P.replay_dir(spark, sf_dir)
+    files = sorted(
+        f for f in os.listdir(rd) if f.endswith(".parquet")
+    )
+    assert len(files) == P.N_SLICES
+    mtimes = [os.path.getmtime(os.path.join(rd, f)) for f in files]
+    assert mtimes == sorted(mtimes)
+    assert len(set(mtimes)) == P.N_SLICES, "mtimes must be strictly distinct"
+    # slice files in mtime order carry non-overlapping, increasing event
+    # time: max(ts) of slice i < min(ts) of slice i+1 (half-open spans)
+    bounds = []
+    for f in files:
+        df = spark.read.parquet(os.path.join(rd, f))
+        lo, hi = df.agg(F.min("ts"), F.max("ts")).first()
+        bounds.append((lo, hi))
+    for (_, hi_prev), (lo_next, _) in zip(bounds, bounds[1:]):
+        if hi_prev is not None and lo_next is not None:
+            assert hi_prev < lo_next, (hi_prev, lo_next)
+    total = sum(
+        spark.read.parquet(os.path.join(rd, f)).count() for f in files
+    )
+    assert total == load_table(spark, sf_dir, "events").count()
