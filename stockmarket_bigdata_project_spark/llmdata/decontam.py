@@ -318,13 +318,13 @@ def _ensure_bench_gram_index(spark: SparkSession, sf_dir: str) -> str:
     """Write the distinct benchmark NGRAM_N-gram set as a stored table,
     once per (session, corpus) — built when a benchmark suite is
     registered, not per batch. Cache keying / table-tag hygiene:
-    indexcache (r9-ADVICE fix)."""
-    from . import indexcache
+    scratch."""
+    from .. import scratch
 
-    t = f"bench_grams_{indexcache.table_tag(sf_dir)}"
+    t = f"bench_grams_{scratch.table_tag(sf_dir)}"
 
     def build() -> str:
-        indexcache.drop_table(spark, t)
+        scratch.drop_table(spark, t)
         docs = load_table(spark, sf_dir, "documents")
         bench = docs.filter(F.col("doc_id") % BENCH_MOD == 0)
         _word_ngrams(bench, NGRAM_N, distinct=False).select(
@@ -332,7 +332,7 @@ def _ensure_bench_gram_index(spark: SparkSession, sf_dir: str) -> str:
         ).distinct().write.mode("overwrite").saveAsTable(t)
         return t
 
-    return indexcache.get_or_build(spark, "bench_grams", sf_dir, build)
+    return scratch.get_or_build(spark, "bench_grams", sf_dir, build)
 
 
 def incremental_decontam_indexed(

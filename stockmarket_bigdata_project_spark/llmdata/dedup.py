@@ -506,17 +506,17 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # has always declared "at 100 TB the corpus hash set is a pre-materialized
 # index" — this is that form, completing the stored-index family (exact,
 # MinHash, semantic, decontamination all have one now). Cache keying,
-# invalidation, and table-tag hygiene live in indexcache (r9-ADVICE fix).
+# invalidation, and table-tag hygiene live in scratch.
 def _ensure_exact_hash_index(spark: SparkSession, sf_dir: str) -> str:
     """Write the corpus' distinct normalized-text hash set as a bucketed,
     sorted table on text_hash, once per (session, corpus) — the nightly
     index job."""
-    from . import indexcache
+    from .. import scratch
 
-    t = f"exact_hash_idx_{indexcache.table_tag(sf_dir)}"
+    t = f"exact_hash_idx_{scratch.table_tag(sf_dir)}"
 
     def build() -> str:
-        indexcache.drop_table(spark, t)
+        scratch.drop_table(spark, t)
         docs = load_table(spark, sf_dir, "documents")
         is_new = F.col("doc_id") % INCR_MOD == INCR_REM
         (
@@ -530,7 +530,7 @@ def _ensure_exact_hash_index(spark: SparkSession, sf_dir: str) -> str:
         )
         return t
 
-    return indexcache.get_or_build(spark, "exact_hash_idx", sf_dir, build)
+    return scratch.get_or_build(spark, "exact_hash_idx", sf_dir, build)
 
 
 def incremental_dedup_indexed(
@@ -655,14 +655,14 @@ def _ensure_lsh_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the corpus hot-bucket table, once per (session, corpus). At 100 TB
     this is the nightly index-build job; the per-batch query below never
     recomputes it."""
-    from . import indexcache
+    from .. import scratch
 
-    tag = indexcache.table_tag(sf_dir)
+    tag = scratch.table_tag(sf_dir)
     bt, ht = f"lsh_band_idx_{tag}", f"lsh_hot_idx_{tag}"
 
     def build() -> tuple[str, str]:
         for t in (bt, ht):
-            indexcache.drop_table(spark, t)
+            scratch.drop_table(spark, t)
         is_new = F.col("doc_id") % INCR_MOD == INCR_REM
         corpus_bands = (
             _minhash_df(spark, sf_dir)
@@ -688,7 +688,7 @@ def _ensure_lsh_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         )
         return bt, ht
 
-    return indexcache.get_or_build(spark, "lsh_band_idx", sf_dir, build)
+    return scratch.get_or_build(spark, "lsh_band_idx", sf_dir, build)
 
 
 def _indexed_candidates(

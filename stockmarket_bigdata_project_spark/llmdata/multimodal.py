@@ -25,6 +25,9 @@ spark.sql.execution.arrow.maxRecordsPerBatch bounds decoder memory (payloads
 arrive batch-at-a-time, not table-at-a-time); metadata-only queries
 (media_catalog) never touch the payload column thanks to parquet column
 pruning — check ReadSchema in .explain().
+
+The media files binary_file_scan reads are a ``scratch`` dir staged once
+per (application, sf_dir), removed by ``scratch.release`` or process exit.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..scratch import get_or_build, scratch_dir
 
 N_FRAMES = 8
 FRAME_LEN = 32  # bytes per frame = one md5 hex string
@@ -373,25 +377,15 @@ def image_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_mediafile_lock = __import__("threading").Lock()
-
-
 def _stage_media_files(spark: SparkSession, sf_dir: str) -> str:
     """Write each media payload as its own file (media_<id>.bin) — the
     on-disk shape raw media actually arrives in. Distributed write: each
     task writes its partition's assets (at scale the target is object
-    storage; locally a shared tmpdir). Idempotent via a done-marker, so
-    the files stage once per (process, sf_dir)."""
+    storage; locally a scratch dir). Staged once per (application, sf_dir)."""
     import os
-    import tempfile
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(tempfile.gettempdir(), f"spark_graft_mediafiles_{tag}")
-    done = os.path.join(out, "_STAGED")
-    with _mediafile_lock:
-        if os.path.exists(done):
-            return out
-        os.makedirs(out, exist_ok=True)
+    def build() -> str:
+        out = scratch_dir(spark, "mediafiles")
 
         def write_partition(rows) -> None:
             for r in rows:
@@ -404,9 +398,9 @@ def _stage_media_files(spark: SparkSession, sf_dir: str) -> str:
         media_table(spark, sf_dir).select(
             "media_id", "payload"
         ).foreachPartition(write_partition)
-        with open(done, "w"):
-            pass
         return out
+
+    return get_or_build(spark, "mediafiles", sf_dir, build)
 
 
 def binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

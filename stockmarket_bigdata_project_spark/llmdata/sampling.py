@@ -660,9 +660,8 @@ def _ensure_shard_bucketed_tables(
     """Write the doc-id projection and the resolved near-dup component
     relation as co-bucketed, sorted tables (once per (session, corpus)) —
     the nightly layout job; the per-epoch query below joins them
-    shuffle-free. Cache keying / table-tag hygiene: indexcache
-    (r9-ADVICE fix)."""
-    from .indexcache import drop_table, get_or_build, table_tag
+    shuffle-free. Cache keying / table-tag hygiene: scratch."""
+    from ..scratch import drop_table, get_or_build, table_tag
 
     tag = table_tag(sf_dir)
     dt, ct = f"docs_shard_b_{tag}", f"comp_shard_b_{tag}"

@@ -1122,8 +1122,8 @@ def _ensure_semdedup_index(
     exchange on the corpus side. Corpus assignment itself uses the
     two-level ANN route (the semdedup_survivors_ann path), which is what
     a 100 TB deployment stores. Cache keying / table-tag hygiene:
-    indexcache (r9-ADVICE fix)."""
-    from .indexcache import drop_table, get_or_build, table_tag
+    scratch."""
+    from ..scratch import drop_table, get_or_build, table_tag
 
     tag = table_tag(sf_dir)
     gt, ft, at = (

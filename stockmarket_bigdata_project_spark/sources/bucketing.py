@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
-from ..llmdata.indexcache import drop_table, get_or_build, table_tag
+from ..scratch import drop_table, get_or_build, table_tag
 
 N_BUCKETS = 8
 

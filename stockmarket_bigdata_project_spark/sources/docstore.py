@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import threading
 from typing import Protocol
 
@@ -72,8 +71,8 @@ class ParquetDocumentStore:
     directories swap — nothing is ever collected to the driver, so the
     store scales to collections the driver could not hold."""
 
-    def __init__(self, path: str | None = None):
-        self.path = path or tempfile.mkdtemp(prefix="spark_graft_docstore_")
+    def __init__(self, path: str):
+        self.path = path
 
     @property
     def _staging(self) -> str:

@@ -26,13 +26,9 @@ value-checked end to end, not rows-only.
 from __future__ import annotations
 
 import ast
-import itertools
 import json
 import math
-import os
 from typing import Iterator
-
-_STREAM_SEQ = itertools.count()
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -239,11 +235,12 @@ def python_datasource_stream_ticks(spark, sf_dir):
     the end of the feed — the bounded-replay idiom for a custom source.
     Batch/stream parity: read() is the same Arrow generator, so the result
     equals python_datasource_ticks and shares its oracle shape."""
-    import shutil
     import tempfile
     import time
 
     import pyspark.sql.functions as F
+
+    from ..scratch import sink_name
 
     _register(spark)
     sdf = (
@@ -252,38 +249,39 @@ def python_datasource_stream_ticks(spark, sf_dir):
         .option("rows_per_batch", 25_000)
         .load()
     )
-    name = f"pyds_stream_{os.getpid()}_{next(_STREAM_SEQ)}"
-    chk = tempfile.mkdtemp(prefix="spark_graft_pyds_chk_")
-    q = (
-        sdf.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", chk)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p.get("sources"):
-                end = p["sources"][0].get("endOffset")
-                if isinstance(end, str):
-                    # progress offsets arrive serialized; Python-source
-                    # offsets render as a dict repr ({'tick': N}), not JSON
-                    try:
-                        end = json.loads(end)
-                    except json.JSONDecodeError:
-                        end = ast.literal_eval(end)
-                if end and end.get("tick") == 100_000:
-                    break
-            time.sleep(0.2)
-        else:
-            raise TimeoutError("tick stream did not drain within 120s")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(chk, ignore_errors=True)
+    name = sink_name(spark, "pyds_stream_")
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_pyds_chk_", ignore_cleanup_errors=True
+    ) as chk:
+        q = (
+            sdf.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", chk)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + 120
+            while time.time() < deadline:
+                p = q.lastProgress
+                if p and p.get("sources"):
+                    end = p["sources"][0].get("endOffset")
+                    if isinstance(end, str):
+                        # progress offsets arrive serialized; Python-source
+                        # offsets render as a dict repr ({'tick': N}), not JSON
+                        try:
+                            end = json.loads(end)
+                        except json.JSONDecodeError:
+                            end = ast.literal_eval(end)
+                    if end and end.get("tick") == 100_000:
+                        break
+                time.sleep(0.2)
+            else:
+                raise TimeoutError("tick stream did not drain within 120s")
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return spark.table(name).groupBy("symbol").agg(
         F.count("*").alias("n_ticks"),
         F.sum(F.col("px").cast("decimal(27,2)")).cast("double").alias("total_px"),

@@ -23,7 +23,6 @@ malformed handling is DROPMALFORMED at the scan — no driver-side row loop.
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 
 import pyspark.sql.functions as F
@@ -37,8 +36,8 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
+from ..scratch import get_or_build, scratch_dir
 
-_staged: dict[tuple[str, str], str] = {}
 _lock = threading.Lock()
 
 EVENTS_CSV_SCHEMA = StructType(
@@ -53,12 +52,11 @@ EVENTS_CSV_SCHEMA = StructType(
 
 
 def _stage(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Write the raw-file fixture for `kind` once per (sf_dir, kind)."""
-    with _lock:
-        key = (sf_dir, kind)
-        if key in _staged:
-            return _staged[key]
-        out = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_")
+    """Write the raw-file fixture for `kind` once per (application, sf_dir,
+    kind) into a scratch dir."""
+
+    def build() -> str:
+        out = scratch_dir(spark, kind)
         ev = load_table(spark, sf_dir, "events")
         if kind == "csv":
             # ISO-8601 microsecond text keeps the timestamp roundtrip exact
@@ -134,8 +132,9 @@ def _stage(spark: SparkSession, sf_dir: str, kind: str) -> str:
             ).write.mode("overwrite").json(out)
         else:
             raise ValueError(kind)
-        _staged[key] = out
         return out
+
+    return get_or_build(spark, f"fixture_{kind}", sf_dir, build)
 
 
 # --- S4: CSV scan with explicit schema --------------------------------------
@@ -292,7 +291,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="spark_graft_evo_")
+    root = scratch_dir(spark, "evo")
     old_batch = ev.filter(F.col("event_id") % 2 == 0)
     new_batch = ev.filter(F.col("event_id") % 2 == 1).withColumn(
         "score", F.expr("CAST(round(value * 100) AS BIGINT) % 97")

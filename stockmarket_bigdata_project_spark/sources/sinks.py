@@ -20,7 +20,6 @@ and must never be used on large outputs.
 
 from __future__ import annotations
 
-import tempfile
 import threading
 
 import pyspark.sql.functions as F
@@ -29,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..catalog import load_table
 from ..functions.exact import dec_sum
 from ..operators.gold import GOLD_ORACLE_SQL, SUPPLIER_DAILY_SQL, gold_daily_features
+from ..scratch import scratch_dir
 
 _lock = threading.Lock()
 
@@ -39,7 +39,7 @@ def partitioned_gold_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     date filter — the filter must prune partitions (directory-level skip),
     which .explain() shows as PartitionFilters. Returns the pruned slice."""
     gold = gold_daily_features(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="spark_graft_gold_")
+    out = scratch_dir(spark, "gold")
     with _lock:
         # r14 (guide §6 output sizing): cluster rows by the partition column
         # before the partitioned write — without this every upstream task
@@ -117,7 +117,7 @@ def single_file_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("day_total"),
         )
     )
-    out = tempfile.mkdtemp(prefix="spark_graft_csv1_")
+    out = scratch_dir(spark, "csv1")
     with _lock:
         daily.coalesce(1).write.mode("overwrite").option("header", True).csv(out)
     return (
@@ -148,8 +148,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = daily.withColumn(
         "month", F.date_trunc("month", "day").cast("date")
     )
-    frag = tempfile.mkdtemp(prefix="spark_graft_frag_")
-    compacted = tempfile.mkdtemp(prefix="spark_graft_compact_")
+    frag = scratch_dir(spark, "frag")
+    compacted = scratch_dir(spark, "compact")
     with _lock:
         # fragmented state: round-robin repartition scatters each month's
         # ~30 daily rows across 8 tasks → up to 8 small files per partition

@@ -23,7 +23,6 @@ a real deployment scale them independently.
 
 from __future__ import annotations
 
-import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
@@ -42,13 +41,8 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
-from .pipelines import (
-    _ROCKSDB_CONF,
-    _events_stream,
-    _query_name,
-    _run_stream,
-    _run_to_memory,
-)
+from ..scratch import scratch_dir, sink_name
+from .pipelines import _ROCKSDB_CONF, _events_stream, _run_stream, _run_to_memory
 
 
 class ProgressCollector(StreamingQueryListener):
@@ -83,8 +77,9 @@ def run_concurrent_bronze_silver(
     progress. Returns (bronze, silver, listener). Each query re-reads the
     source independently, exactly like the reference's two writeStream
     branches (SURVEY §3.1 step 3)."""
-    bronze_dir = tempfile.mkdtemp(prefix="spark_graft_bronze_")
-    bronze_name, silver_name = _query_name("bronze_raw_"), _query_name("silver_agg_t9_")
+    bronze_dir = scratch_dir(spark, "bronze")
+    bronze_name = sink_name(spark, "bronze_raw_")
+    silver_name = sink_name(spark, "silver_agg_t9_")
     bronze_src = _events_stream(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )

@@ -32,13 +32,16 @@ Scale notes (100 TB): the streaming state store only ever holds open windows
 (watermark evicts), so state is bounded by (windows in delay horizon ×
 group cardinality), not by stream length; foreachBatch parquet appends are
 partitioned writes, one file per executor task, no driver collect.
+
+Scratch: the replay dir, sink dirs and memory-sink views belong to
+``scratch`` and live until ``scratch.release(spark)`` or process exit; a
+run's checkpoint is removed as soon as the run ends.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
 import tempfile
 import threading
 import time
@@ -50,6 +53,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import load_table
 from ..functions.exact import dec_sum
+from ..scratch import get_or_build, scratch_dir, sink_name
 from ..session import ROCKSDB_STATE_STORE_PROVIDER
 
 WATERMARK = "10 minutes"
@@ -57,10 +61,6 @@ WINDOW = "15 minutes"
 SLIDE_WINDOW = "30 minutes"
 SESSION_GAP = "30 minutes"
 N_SLICES = 4
-
-_replay_cache: dict[tuple[str, int], str] = {}
-_lock = threading.Lock()
-_uniq = iter(range(10**9))
 
 
 def replay_dir(spark: SparkSession, sf_dir: str, n_slices: int = N_SLICES) -> str:
@@ -71,15 +71,14 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_slices: int = N_SLICES) -> st
     themselves are independent jobs and run concurrently (guide §2.6);
     arrival order comes from the stamped mtimes, not from write timing, so
     the replay is deterministic without the former per-slice mtime sleeps.
-    Cached per sf_dir: every streaming query replays the same corpus."""
-    with _lock:
-        key = (sf_dir, n_slices)
-        if key in _replay_cache:
-            return _replay_cache[key]
+    Built once per (application, sf_dir, n_slices) in a scratch dir: every
+    streaming query replays the same corpus."""
+
+    def build() -> str:
         ev = load_table(spark, sf_dir, "events")
         lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
         span = (hi - lo) / n_slices
-        out = tempfile.mkdtemp(prefix="spark_graft_replay_")
+        out = scratch_dir(spark, "replay")
 
         def write_slice(i: int) -> str:
             start = lo + span * i
@@ -89,8 +88,9 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_slices: int = N_SLICES) -> st
             )
             # own staging dir per slice: concurrent appends into ONE dir
             # would race on the shared _temporary commit dir
-            stage = tempfile.mkdtemp(prefix="spark_graft_replay_slice_")
-            try:
+            with tempfile.TemporaryDirectory(
+                prefix="spark_graft_replay_slice_", ignore_cleanup_errors=True
+            ) as stage:
                 ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(stage)
                 parts = [f for f in os.listdir(stage) if f.endswith(".parquet")]
                 if len(parts) != 1:
@@ -101,8 +101,6 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_slices: int = N_SLICES) -> st
                 dst = os.path.join(out, f"slice_{i:02d}.parquet")
                 os.replace(os.path.join(stage, parts[0]), dst)
                 return dst
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -112,8 +110,9 @@ def replay_dir(spark: SparkSession, sf_dir: str, n_slices: int = N_SLICES) -> st
         for i, dst in enumerate(slices):
             mtime = now - (n_slices - i)  # strictly increasing, all past
             os.utime(dst, (mtime, mtime))
-        _replay_cache[key] = out
         return out
+
+    return get_or_build(spark, f"replay_{n_slices}", sf_dir, build)
 
 
 # Scale-adaptive streaming shuffle/state partitioning (guide §2.2 "fewer,
@@ -179,10 +178,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _query_name(prefix: str = "q") -> str:
-    return f"{prefix}{next(_uniq)}_{os.getpid()}"
-
-
 def _run_stream(
     stream_df: DataFrame,
     sf_dir: str,
@@ -208,8 +203,9 @@ def _run_stream(
     Results do not depend on the partition count (exact decimal sums), only
     the state-commit overhead does."""
     spark = stream_df.sparkSession
-    chk = tempfile.mkdtemp(prefix="spark_graft_chk_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_chk_", ignore_cleanup_errors=True
+    ) as chk:
         writer = (
             sink(stream_df.writeStream)
             .option("checkpointLocation", chk)
@@ -235,8 +231,6 @@ def _run_stream(
                         spark.conf.set(k, v)
         q.awaitTermination()
         return q
-    finally:
-        shutil.rmtree(chk, ignore_errors=True)
 
 
 def _run_to_memory(
@@ -248,7 +242,7 @@ def _run_to_memory(
 ) -> DataFrame:
     """Run a streaming DF to completion into a memory sink under a fresh
     query name; return the result as a batch DF."""
-    name = _query_name()
+    name = sink_name(stream_df.sparkSession)
     _run_stream(
         stream_df,
         sf_dir,
@@ -389,7 +383,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "ts", "event_type", "value")
         .join(cust, "user_id")
     )
-    sink = tempfile.mkdtemp(prefix="spark_graft_sink_")
+    sink = scratch_dir(spark, "sink")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # isEmpty() not count(): count() is a full extra job (SURVEY §4.1)
@@ -424,7 +418,7 @@ def streaming_upsert_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    base = tempfile.mkdtemp(prefix="spark_graft_view_")
+    base = scratch_dir(spark, "view")
     state: dict[str, str | None] = {"dir": None}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -722,7 +716,7 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import CMS_D, CMS_T, _cms_bucket
 
     stream = _events_stream(spark, sf_dir).select("user_id")
-    sink = tempfile.mkdtemp(prefix="spark_graft_cms_")
+    sink = scratch_dir(spark, "cms")
 
     def write_partial(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

@@ -30,11 +30,11 @@ def test_bucketed_join_rebuilds_after_cache_clear_and_drop(spark, sf_dir):
     """The bucketed pair goes through the shared stored-index cache: after
     clear_prepared_indexes() and a DROP TABLE of both tables, the next call
     rebuilds them instead of trusting a stale memo."""
-    from stockmarket_bigdata_project_spark.llmdata import indexcache
+    from stockmarket_bigdata_project_spark import scratch
 
     n = bucketed_join_orders_lineitem(spark, sf_dir).count()
-    tag = indexcache.table_tag(sf_dir)
-    indexcache.clear_prepared_indexes()
+    tag = scratch.table_tag(sf_dir)
+    scratch.clear_prepared_indexes()
     for t in (f"orders_b_{tag}", f"lineitem_b_{tag}"):
         spark.sql(f"DROP TABLE {t}")
     assert bucketed_join_orders_lineitem(spark, sf_dir).count() == n

@@ -19,8 +19,8 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k bigint, v string")
 
 
-def test_parquet_store_upsert_replaces_by_key(spark):
-    store = ParquetDocumentStore()
+def test_parquet_store_upsert_replaces_by_key(spark, tmp_path):
+    store = ParquetDocumentStore(str(tmp_path / "store"))
     store.upsert(_df(spark, [(1, "a"), (2, "b")]), keys=["k"])
     # replace k=2, insert k=3 — k=1 must survive untouched
     store.upsert(_df(spark, [(2, "B"), (3, "c")]), keys=["k"])
@@ -28,12 +28,12 @@ def test_parquet_store_upsert_replaces_by_key(spark):
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
-def test_parquet_store_reattach_preserves_existing_docs(spark):
+def test_parquet_store_reattach_preserves_existing_docs(spark, tmp_path):
     """State is derived from the files at path, not an instance flag: a
     FRESH store constructed over a path that already holds documents must
     merge against them — the first upsert through the new handle may not
     truncate the collection (the keyed-upsert contract under reattach)."""
-    first = ParquetDocumentStore()
+    first = ParquetDocumentStore(str(tmp_path / "store"))
     first.upsert(_df(spark, [(1, "a"), (2, "b")]), keys=["k"])
     reattached = ParquetDocumentStore(path=first.path)
     reattached.upsert(_df(spark, [(2, "B"), (3, "c")]), keys=["k"])
@@ -41,7 +41,7 @@ def test_parquet_store_reattach_preserves_existing_docs(spark):
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
-def test_parquet_store_upsert_never_collects_to_driver(spark, monkeypatch):
+def test_parquet_store_upsert_never_collects_to_driver(spark, monkeypatch, tmp_path):
     """The merge rewrite must stay executor-side (staging write + swap):
     any DataFrame.collect() during upsert is the driver-OOM shape the
     DocumentStore contract forbids."""
@@ -50,7 +50,7 @@ def test_parquet_store_upsert_never_collects_to_driver(spark, monkeypatch):
     def _banned(self, *a, **kw):  # pragma: no cover - fails the test
         raise AssertionError("upsert() collected a DataFrame to the driver")
 
-    store = ParquetDocumentStore()
+    store = ParquetDocumentStore(str(tmp_path / "store"))
     store.upsert(_df(spark, [(1, "a"), (2, "b")]), keys=["k"])
     monkeypatch.setattr(_DF, "collect", _banned)
     store.upsert(_df(spark, [(2, "B"), (3, "c")]), keys=["k"])
@@ -59,18 +59,18 @@ def test_parquet_store_upsert_never_collects_to_driver(spark, monkeypatch):
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
-def test_parquet_store_append_is_unkeyed(spark):
-    store = ParquetDocumentStore()
+def test_parquet_store_append_is_unkeyed(spark, tmp_path):
+    store = ParquetDocumentStore(str(tmp_path / "store"))
     store.append(_df(spark, [(1, "a")]))
     store.append(_df(spark, [(1, "a2")]))
     assert store.read(spark).count() == 2
 
 
-def test_foreach_batch_upsert_is_idempotent_per_batch(spark):
+def test_foreach_batch_upsert_is_idempotent_per_batch(spark, tmp_path):
     """A retried microbatch (same data, new batch_id) must not duplicate
     keyed state — the exactly-once property the reference's per-document
     replace_one(upsert=True) loop relied on."""
-    store = ParquetDocumentStore()
+    store = ParquetDocumentStore(str(tmp_path / "store"))
     sink = foreach_batch_upsert(store, keys=["k"])
     batch = _df(spark, [(1, "a"), (2, "b")])
     sink(batch, 0)
@@ -102,14 +102,14 @@ def test_parquet_store_read_failure_does_not_truncate(spark, tmp_path):
     assert survivors, "read failure truncated the existing collection"
 
 
-def test_parquet_store_recovers_interrupted_swap(spark):
+def test_parquet_store_recovers_interrupted_swap(spark, tmp_path):
     """Crash window between the two swap renames: live path missing, the
     completed merge stranded in __staging. The next operation through any
     handle must finish the swap and serve the merged state."""
     import os
     import shutil
 
-    store = ParquetDocumentStore()
+    store = ParquetDocumentStore(str(tmp_path / "store"))
     store.upsert(_df(spark, [(1, "a"), (2, "b")]), keys=["k"])
     # simulate the crash: merged result staged, live dir moved aside
     shutil.copytree(store.path, store._staging)
@@ -122,7 +122,7 @@ def test_parquet_store_recovers_interrupted_swap(spark):
     assert not os.path.isdir(store._old)
 
 
-def test_parquet_store_survives_spark_write_killed_mid_staging(spark):
+def test_parquet_store_survives_spark_write_killed_mid_staging(spark, tmp_path):
     """A Spark writer killed DURING the staging write (executor OOM / driver
     kill) leaves part-files in __staging with no _SUCCESS commit marker —
     unlike the os-level crash points between renames, the staging content is
@@ -133,7 +133,7 @@ def test_parquet_store_survives_spark_write_killed_mid_staging(spark):
     import os
     import shutil
 
-    store = ParquetDocumentStore()
+    store = ParquetDocumentStore(str(tmp_path / "store"))
     store.upsert(_df(spark, [(1, "a"), (2, "b")]), keys=["k"])
 
     # simulate a killed mid-staging write: a lone part-file, no _SUCCESS
@@ -186,7 +186,7 @@ def test_mongo_builder_option_mapping(spark):
         writer.save()
 
 
-def test_streaming_upsert_into_docstore_end_to_end(spark, sf_dir):
+def test_streaming_upsert_into_docstore_end_to_end(spark, sf_dir, tmp_path):
     """The seam under a REAL micro-batch stream: replay the events corpus
     (one slice per trigger), aggregate per event_type, and upsert every
     micro-batch into a ParquetDocumentStore via foreach_batch_upsert.
@@ -200,7 +200,7 @@ def test_streaming_upsert_into_docstore_end_to_end(spark, sf_dir):
         _events_stream,
     )
 
-    store = ParquetDocumentStore()
+    store = ParquetDocumentStore(str(tmp_path / "store"))
     agg = (
         _events_stream(spark, sf_dir)
         .groupBy("event_type")
@@ -212,7 +212,7 @@ def test_streaming_upsert_into_docstore_end_to_end(spark, sf_dir):
         .trigger(availableNow=True)
         .option(
             "checkpointLocation",
-            __import__("tempfile").mkdtemp(prefix="spark_graft_ckpt_"),
+            str(tmp_path / "ckpt"),
         )
         .start()
     )

@@ -1,10 +1,10 @@
-"""Unit pins for llmdata.indexcache (r9 ADVICE items 1+2): identifier-safe
+"""Unit pins for the scratch module's index handles: identifier-safe
 table tags and (family, applicationId, sf_dir) cache keying with an
 explicit invalidation hook."""
 
 from __future__ import annotations
 
-from stockmarket_bigdata_project_spark.llmdata import indexcache
+from stockmarket_bigdata_project_spark import scratch
 
 
 class _FakeCtx:
@@ -21,11 +21,11 @@ def test_table_tag_sanitizes_every_non_word_character():
     # the r9 ADVICE repro: a hyphenated sf_dir must not leak '-' into an
     # unquoted identifier (DROP TABLE bench_grams_data_sf-0_1 is a parse
     # error)
-    assert indexcache.table_tag("/data/sf-0.1") == "data_sf_0_1"
-    assert indexcache.table_tag("/root/testdata/sf0.001") == (
+    assert scratch.table_tag("/data/sf-0.1") == "data_sf_0_1"
+    assert scratch.table_tag("/root/testdata/sf0.001") == (
         "root_testdata_sf0_001"
     )
-    assert indexcache.table_tag("/a b/c+d/") == "a_b_c_d"
+    assert scratch.table_tag("/a b/c+d/") == "a_b_c_d"
 
 
 def test_get_or_build_memoizes_per_application_id():
@@ -38,38 +38,38 @@ def test_get_or_build_memoizes_per_application_id():
 
         return build
 
-    indexcache.clear_prepared_indexes()
+    scratch.clear_prepared_indexes()
     try:
         a, b = _FakeSpark("app-A"), _FakeSpark("app-B")
         # same (family, app, sf): one build
-        assert indexcache.get_or_build(a, "fam", "/sf", build_for("a1")) == (
+        assert scratch.get_or_build(a, "fam", "/sf", build_for("a1")) == (
             "table_a1"
         )
-        assert indexcache.get_or_build(a, "fam", "/sf", build_for("a2")) == (
+        assert scratch.get_or_build(a, "fam", "/sf", build_for("a2")) == (
             "table_a1"
         )
         # a SECOND SparkSession (fresh in-memory catalog) must REBUILD —
         # the r9 ADVICE failure was an sf_dir-only key telling session B
         # the table exists when B's catalog has never seen it
-        assert indexcache.get_or_build(b, "fam", "/sf", build_for("b1")) == (
+        assert scratch.get_or_build(b, "fam", "/sf", build_for("b1")) == (
             "table_b1"
         )
         # distinct family / sf_dir: independent entries
-        assert indexcache.get_or_build(a, "fam2", "/sf", build_for("f2")) == (
+        assert scratch.get_or_build(a, "fam2", "/sf", build_for("f2")) == (
             "table_f2"
         )
-        assert indexcache.get_or_build(a, "fam", "/sf2", build_for("s2")) == (
+        assert scratch.get_or_build(a, "fam", "/sf2", build_for("s2")) == (
             "table_s2"
         )
         assert calls == ["a1", "b1", "f2", "s2"]
         # explicit invalidation: the next call rebuilds
-        indexcache.clear_prepared_indexes()
-        assert indexcache.get_or_build(a, "fam", "/sf", build_for("a3")) == (
+        scratch.clear_prepared_indexes()
+        assert scratch.get_or_build(a, "fam", "/sf", build_for("a3")) == (
             "table_a3"
         )
         assert calls[-1] == "a3"
     finally:
-        indexcache.clear_prepared_indexes()
+        scratch.clear_prepared_indexes()
 
 
 def test_nested_build_for_different_key_does_not_deadlock():
@@ -79,7 +79,7 @@ def test_nested_build_for_different_key_does_not_deadlock():
     instead of deadlocking, and unrelated keys must build concurrently."""
     import threading
 
-    indexcache.clear_prepared_indexes()
+    scratch.clear_prepared_indexes()
     spark = _FakeSpark("app-N")
     try:
 
@@ -88,12 +88,12 @@ def test_nested_build_for_different_key_does_not_deadlock():
 
         def outer() -> str:
             # nested get_or_build for a DIFFERENT key from inside a build
-            return indexcache.get_or_build(spark, "inner_fam", "/sf", inner)
+            return scratch.get_or_build(spark, "inner_fam", "/sf", inner)
 
         done: list[str] = []
 
         def run() -> None:
-            done.append(indexcache.get_or_build(spark, "outer_fam", "/sf", outer))
+            done.append(scratch.get_or_build(spark, "outer_fam", "/sf", outer))
 
         t = threading.Thread(target=run, daemon=True)
         t.start()
@@ -118,7 +118,7 @@ def test_nested_build_for_different_key_does_not_deadlock():
             threading.Thread(
                 target=lambda f=fam: results.__setitem__(
                     f,
-                    indexcache.get_or_build(spark, f, "/sfc", blocking_build(f)),
+                    scratch.get_or_build(spark, f, "/sfc", blocking_build(f)),
                 ),
                 daemon=True,
             )
@@ -130,7 +130,7 @@ def test_nested_build_for_different_key_does_not_deadlock():
             th.join(timeout=15)
         assert results == {"fam_x": "fam_x", "fam_y": "fam_y"}
     finally:
-        indexcache.clear_prepared_indexes()
+        scratch.clear_prepared_indexes()
 
 
 def test_clear_racing_reads_never_raises(monkeypatch):
@@ -142,27 +142,27 @@ def test_clear_racing_reads_never_raises(monkeypatch):
     must return a valid handle (memoized or freshly built), never raise."""
     import threading
 
-    indexcache.clear_prepared_indexes()
+    scratch.clear_prepared_indexes()
     spark = _FakeSpark("app-race")
     stop = threading.Event()
     errors: list[BaseException] = []
 
     def spam_clear() -> None:
         while not stop.is_set():
-            indexcache.clear_prepared_indexes()
+            scratch.clear_prepared_indexes()
 
     t = threading.Thread(target=spam_clear, daemon=True)
     t.start()
     try:
         for _ in range(3000):
-            got = indexcache.get_or_build(spark, "fam", "/sf", lambda: "t")
+            got = scratch.get_or_build(spark, "fam", "/sf", lambda: "t")
             assert got == "t"
     except BaseException as e:  # pragma: no cover - the regression signal
         errors.append(e)
     finally:
         stop.set()
         t.join(timeout=10)
-        indexcache.clear_prepared_indexes()
+        scratch.clear_prepared_indexes()
     assert not errors, errors
 
 
@@ -174,7 +174,7 @@ def test_clear_scope_documented_completed_builds_only():
     builders first, as tools_scale_study does)."""
     import threading
 
-    indexcache.clear_prepared_indexes()
+    scratch.clear_prepared_indexes()
     spark = _FakeSpark("app-scope")
     in_build = threading.Event()
     release = threading.Event()
@@ -189,19 +189,19 @@ def test_clear_scope_documented_completed_builds_only():
     got: list[str] = []
 
     def run() -> None:
-        got.append(indexcache.get_or_build(spark, "fam", "/sf", slow_build))
+        got.append(scratch.get_or_build(spark, "fam", "/sf", slow_build))
 
     t = threading.Thread(target=run, daemon=True)
     t.start()
     assert in_build.wait(timeout=10)
-    indexcache.clear_prepared_indexes()  # lands mid-build
+    scratch.clear_prepared_indexes()  # lands mid-build
     release.set()
     t.join(timeout=10)
     assert got == ["handle-1"]
     # the mid-build clear did not evict the in-flight handle: next call is warm
     assert (
-        indexcache.get_or_build(spark, "fam", "/sf", lambda: "handle-2")
+        scratch.get_or_build(spark, "fam", "/sf", lambda: "handle-2")
         == "handle-1"
     )
     assert calls == ["built"]
-    indexcache.clear_prepared_indexes()
+    scratch.clear_prepared_indexes()

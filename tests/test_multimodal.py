@@ -8,6 +8,8 @@ real-decoder stub contract.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from stockmarket_bigdata_project_spark.llmdata import multimodal as M
@@ -206,3 +208,36 @@ def test_real_image_features_with_pil(spark):
         for r in M.real_image_features(df).collect()
     }
     assert got == expect
+
+
+def test_binary_file_scan_stages_each_catalog_apart(spark, sf_dir, tmp_path):
+    """Two catalogs whose dirs share a basename but hold different
+    documents stage their media files apart: each scan reads the payloads
+    of its own catalog."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    from stockmarket_bigdata_project_spark.catalog import table_path
+
+    a, b = str(tmp_path / "a" / "sf"), str(tmp_path / "b" / "sf")
+    for d in (a, b):
+        os.makedirs(d)
+    shutil.copy(table_path(sf_dir, "documents"), table_path(a, "documents"))
+    docs = pq.read_table(table_path(sf_dir, "documents"))
+    i = docs.schema.get_field_index("text")
+    edited = pc.binary_join_element_wise(docs["text"], "!", "")
+    pq.write_table(docs.set_column(i, "text", edited), table_path(b, "documents"))
+
+    def scanned(d):
+        return sorted(r.payload_md5 for r in M.binary_file_scan(spark, d).collect())
+
+    def expected(d):
+        m = M.media_table(spark, d).select(F.md5("payload").alias("h"))
+        return sorted(r.h for r in m.collect())
+
+    got_a, got_b = scanned(a), scanned(b)
+    assert got_a and got_a != got_b
+    assert got_a == expected(a) and got_b == expected(b)

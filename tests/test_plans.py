@@ -2054,10 +2054,11 @@ def test_stored_hot_set_shuffle_anti_executes_when_nonempty(
     and AQE level, the hot-set anti-join EXECUTES as a non-broadcast
     LeftAnti against the stored table, and the candidate rows are
     IDENTICAL to the default-regime run (strategy invariance)."""
-    from stockmarket_bigdata_project_spark.llmdata import dedup, indexcache
+    from stockmarket_bigdata_project_spark import scratch
+    from stockmarket_bigdata_project_spark.llmdata import dedup
 
     monkeypatch.setattr(dedup, "LSH_BUCKET_CAP", 2)
-    indexcache.clear_prepared_indexes()
+    scratch.clear_prepared_indexes()
     dedup.clear_staged_memo()
     try:
         _bt, ht = dedup._ensure_lsh_index(spark, sf_dir)
@@ -2091,7 +2092,7 @@ def test_stored_hot_set_shuffle_anti_executes_when_nonempty(
         assert forced == base, "anti-join strategy changed the rows"
     finally:
         # drop the cap=2 memo so any later caller rebuilds the real index
-        indexcache.clear_prepared_indexes()
+        scratch.clear_prepared_indexes()
         dedup.clear_staged_memo()
 
 

@@ -335,7 +335,6 @@ def test_replay_dir_leaves_only_the_replay_dir(spark, sf_dir, tmp_path):
         total = spark.read.parquet(out).count()
         assert total == catalog.load_table(spark, sf, "events").count()
     finally:
-        pipelines._replay_cache.pop((sf, 3), None)
         shutil.rmtree(out, ignore_errors=True)
 
 
@@ -478,3 +477,82 @@ def test_replay_dir_slices_are_mtime_ordered_and_complete(spark, sf_dir):
         spark.read.parquet(os.path.join(rd, f)).count() for f in files
     )
     assert total == load_table(spark, sf_dir, "events").count()
+
+
+# one query per site that creates scratch: the streaming sinks and memory
+# views, the Python-datasource stream, the sources sinks and fixtures, and
+# the staged media files
+_SCRATCH_SWEEP = (
+    "streaming_window_counts",
+    "streaming_static_join",
+    "streaming_upsert_view",
+    "streaming_cms_merge",
+    "streaming_multi_query",
+    "python_datasource_stream_ticks",
+    "single_file_export",
+    "partitioned_gold_write",
+    "compact_small_files",
+    "schema_evolution_read",
+    "csv_scan_events",
+    "binary_file_scan",
+)
+
+
+def test_release_gives_back_every_dir_and_view(spark, sf_dir, tmp_path, monkeypatch):
+    """Every result of the sweep is readable; release(spark) then leaves the
+    temp dir's spark_graft_* entries and the session's tables as they were
+    before it. A rerun after the release rebuilds its replay and fixture
+    dirs and returns the same rows."""
+    import tempfile
+
+    from stockmarket_bigdata_project_spark import scratch
+    from stockmarket_bigdata_project_spark.registry import all_queries
+
+    queries = all_queries()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    scratch.release(spark)  # handles built before the redirect point elsewhere
+
+    def ours() -> list[str]:
+        return sorted(e for e in os.listdir(tmp_path) if e.startswith("spark_graft_"))
+
+    def tables() -> list[str]:
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    dirs_before, tables_before = ours(), tables()
+    counts = {n: queries[n](spark, sf_dir).count() for n in _SCRATCH_SWEEP}
+    assert all(counts.values()), counts
+    assert len(ours()) > len(dirs_before) and len(tables()) > len(tables_before)
+    scratch.release(spark)
+    assert ours() == dirs_before
+    assert tables() == tables_before
+    for name, prefix in (
+        ("streaming_window_counts", "spark_graft_replay_"),
+        ("csv_scan_events", "spark_graft_csv_"),
+    ):
+        assert queries[name](spark, sf_dir).count() == counts[name]
+        assert any(e.startswith(prefix) for e in ours())
+    scratch.release(spark)
+
+
+def test_process_exit_removes_scratch_dirs(sf_dir, tmp_path):
+    """A process that ran a query and exited leaves no spark_graft_* entry
+    in its temp dir."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os, tempfile\n"
+        "from stockmarket_bigdata_project_spark.session import get_spark\n"
+        "from stockmarket_bigdata_project_spark.sources.sinks import single_file_export\n"
+        f"assert single_file_export(get_spark(), {sf_dir!r}).count() > 0\n"
+        "print(sum(e.startswith('spark_graft_') for e in os.listdir(tempfile.gettempdir())))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=root)
+    run = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=root, capture_output=True,
+        text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert int(run.stdout.split()[-1]) > 0  # the query did write scratch
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("spark_graft_")]

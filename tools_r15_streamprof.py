@@ -22,12 +22,13 @@ import os
 import sys
 import time
 
+from stockmarket_bigdata_project_spark.scratch import sink_name
 from stockmarket_bigdata_project_spark.session import get_spark
 from stockmarket_bigdata_project_spark.streaming import pipelines as P
 
 
 def _run_traced(stream_df, sf_dir: str, label: str):
-    name = P._query_name(f"prof_{label}_")
+    name = sink_name(stream_df.sparkSession, f"prof_{label}_")
     start = time.perf_counter()
     q = P._run_stream(
         stream_df,

@@ -119,7 +119,7 @@ QUERIES = [
     # stays the x1 slice (doc_id < KEY_OFFSET keeps only replica-0 docs)
     # while the corpus grows x1→x8 — its STEADY pass must stay flat. Its
     # COLD pass is a memo read of the ALREADY-BUILT index (the *_indexed
-    # twin runs first in the same process and fills the indexcache memo),
+    # twin runs first in the same process and fills the get_or_build memo),
     # so "cold" here measures the per-batch query against a warm index —
     # the production per-crawl shape; the nightly index build's own
     # ∝-corpus cost shows up in the *_indexed twin's cold column instead.
@@ -201,16 +201,12 @@ def run_index_builds() -> None:
     query rows (fixed-batch, slopes ≈ 0) deliberately read an
     already-built index; this mode measures the OTHER half of the design —
     the nightly index build — as recorded x1→x8 rows. Each measurement
-    clears the indexcache memo first, so build() really drops and rewrites
+    clears the get_or_build memo first, so build() really drops and rewrites
     the catalog tables; expected slope ≈ 1 (the build scans the corpus
     once)."""
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from stockmarket_bigdata_project_spark.llmdata import (
-        decontam,
-        dedup,
-        indexcache,
-        similarity,
-    )
+    from stockmarket_bigdata_project_spark import scratch
+    from stockmarket_bigdata_project_spark.llmdata import decontam, dedup, similarity
     from stockmarket_bigdata_project_spark.session import get_spark
 
     spark = get_spark(app_name="scale-study-index-builds")
@@ -220,9 +216,9 @@ def run_index_builds() -> None:
     # drop_table (not bare DROP TABLE) on both sides: a bare DROP can leave
     # the managed-table warehouse dir behind, which makes the next run's
     # saveAsTable fail in the same warehouse (r11 ADVICE)
-    indexcache.drop_table(spark, "warmup_idx_tbl")
+    scratch.drop_table(spark, "warmup_idx_tbl")
     warm.limit(100).write.mode("overwrite").saveAsTable("warmup_idx_tbl")
-    indexcache.drop_table(spark, "warmup_idx_tbl")
+    scratch.drop_table(spark, "warmup_idx_tbl")
     builders = {
         "exact_hash_index_build": dedup._ensure_exact_hash_index,
         "lsh_band_index_build": dedup._ensure_lsh_index,
@@ -246,7 +242,7 @@ def run_index_builds() -> None:
         secs = {}
         for k in SCALES:
             d = os.path.join(ROOT, f"x{k}")
-            indexcache.clear_prepared_indexes()
+            scratch.clear_prepared_indexes()
             start = time.perf_counter()
             fn(spark, d)
             secs[k] = round(time.perf_counter() - start, 3)
@@ -276,7 +272,8 @@ def run_forced_shuffle_anti() -> None:
     checked on the minhash_lsh_pairs plan."""
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from stockmarket_bigdata_project_spark import registry
-    from stockmarket_bigdata_project_spark.llmdata import dedup, indexcache
+    from stockmarket_bigdata_project_spark import scratch
+    from stockmarket_bigdata_project_spark.llmdata import dedup
     from stockmarket_bigdata_project_spark.session import get_spark
 
     spark = get_spark(app_name="scale-study-forced-anti")
@@ -365,7 +362,7 @@ def run_forced_shuffle_anti() -> None:
             set_broadcast(True)
             results.append(row)
             print(json.dumps(row), flush=True)
-            indexcache.clear_prepared_indexes()
+            scratch.clear_prepared_indexes()
     print(
         json.dumps(
             {
